@@ -70,6 +70,14 @@ _LOG_DIR = "_txn_log"
 _DV_DIR = "dv"
 _VERSION_WIDTH = 20
 
+# commit operations that carry no logical row change: compact/purge
+# rewrite files without changing rows (the dataChange=false analog) and
+# constraint commits carry no add/remove actions. The change feed and
+# both lake stream sources skip these by name.
+_NO_DATA_CHANGE_OPS = frozenset(
+    {"compact", "purge", "set_constraint", "drop_constraint"}
+)
+
 
 class ConcurrentWriteError(RuntimeError):
     """The table moved underneath an overwrite/compact transaction."""
@@ -1231,6 +1239,22 @@ def _maybe_checkpoint(table: str, version: int, every: int) -> None:
         _LOG_STORE.write_atomic(_checkpoint_path(table, version), data)
 
 
+# a commit that loses the put-if-absent race this many times in a row
+# gives up: a LogStore whose listing lags its put-if-absent would
+# otherwise retry the same version forever
+_MAX_COMMIT_ATTEMPTS = 100
+
+
+def _commit_attempts(table: str, operation: str):
+    """Attempt counter for a publish loop: yields up to
+    ``_MAX_COMMIT_ATTEMPTS`` times, then raises ConcurrentWriteError."""
+    yield from range(_MAX_COMMIT_ATTEMPTS)
+    raise ConcurrentWriteError(
+        f"{operation} on {table}: lost the commit race "
+        f"{_MAX_COMMIT_ATTEMPTS} times in a row — giving up"
+    )
+
+
 def _commit_retry(
     table: str, operation: str, adds: list[dict], removes: list[str],
     schema: str, base_version: int, checkpoint_every: int,
@@ -1263,7 +1287,7 @@ def _commit_retry(
     # table stays readable). One snapshot read, checkpoint-bounded.
     if version > 0:
         _check_writer(_snapshot(table, version - 1)["protocol"], table)
-    while True:
+    for _attempt in _commit_attempts(table, operation):
         if expect_head is not None and version - 1 != expect_head:
             # a whole-table-state commit (restore) is only meaningful
             # against the exact head it was computed from
@@ -1342,6 +1366,37 @@ def _commit_retry(
             continue
         _maybe_checkpoint(table, version, checkpoint_every)
         return version
+
+
+def _rewrite_commit(
+    spark: SparkSession, table: str, operation: str, base: int,
+    frames: list[DataFrame], replaced: list[dict], schema: str,
+    checkpoint_every: int, stat_cols: list[str] | None = None,
+    cluster_by: list[str] | None = None, target_files: int | None = None,
+    dropped: tuple | list = (), check: bool = False,
+    txn: tuple[str, int] | None = None,
+) -> int:
+    """The one commit every rewriter (DML, compaction, purge) ends in:
+    write ``frames`` as this commit's files, validate CHECK constraints
+    when ``check`` (the caller writes new values), and publish a commit
+    that removes ``dropped`` paths plus every ``replaced`` add action.
+    The ``replaced`` actions are what the written rows were DERIVED
+    from, so each must still be live and unchanged at publish time — a
+    concurrent DV-delete re-adding one with a fatter vector would
+    otherwise have its tombstones resurrected (the lost update).
+    ``dropped`` files are removed whole, which is safe against such a
+    race: all their rows go either way."""
+    adds: list[dict] = []
+    for df in frames:
+        adds += _write_data_files(df, table, base + 1, stat_cols, cluster_by,
+                                  target_files=target_files)
+    if check:
+        _validate_constraints(spark, table, adds)
+    return _commit_retry(
+        table, operation, adds, [*dropped, *(a["path"] for a in replaced)],
+        schema, base, checkpoint_every, txn=txn,
+        require_unchanged={a["path"]: a for a in replaced},
+    )
 
 
 def _evolve_column_mapping(table: str, df: DataFrame, hint: int):
@@ -1583,7 +1638,6 @@ def compact(
     version's result set is unchanged."""
     base = table_version(table)
     current = live_files(table)
-    removes = [a["path"] for a in current]
     # DV-aware: compacting a table with outstanding deletion vectors
     # must materialize the deletes, never resurrect the deleted rows
     df = _read_adds(spark, table, current)
@@ -1600,12 +1654,10 @@ def compact(
         # would force this exchange to run once for the count and again
         # recomputed under its own range exchange (opt r7)
         df = df.coalesce(num_files)
-    adds = _write_data_files(df, table, base + 1, stat_cols, cluster_by,
-                             target_files=num_files if cluster_by else None)
-    return _commit_retry(
-        table, "compact", adds, removes, df.schema.json(), base,
-        checkpoint_every,
-        require_unchanged={a["path"]: a for a in current},
+    return _rewrite_commit(
+        spark, table, "compact", base, [df], current, df.schema.json(),
+        checkpoint_every, stat_cols, cluster_by,
+        target_files=num_files if cluster_by else None,
     )
 
 
@@ -1731,11 +1783,9 @@ def compact_where(
     total = sum(a.get("bytes", 0) for a in small)
     n_out = max(1, -(-total // target_bytes))  # ceil
     df = _read_adds(spark, table, small).coalesce(n_out)
-    adds = _write_data_files(df, table, base + 1, stat_cols, None)
-    version = _commit_retry(
-        table, "compact", adds, [a["path"] for a in small],
-        df.schema.json(), base, checkpoint_every,
-        require_unchanged={a["path"]: a for a in small},
+    version = _rewrite_commit(
+        spark, table, "compact", base, [df], small, df.schema.json(),
+        checkpoint_every, stat_cols,
     )
     return {"version": version, "files_compacted": len(small),
             "files_total": len(live)}
@@ -1752,24 +1802,11 @@ def compact_small_files(
     is proportional to the small-file fraction, not the table. A lone
     undersized file (or a DV-free singleton) is left alone: rewriting
     one file into one file is pure churn. DV-carrying small files
-    materialize their deletes on the way through."""
-    base = table_version(table)
-    live = live_files(table)
-    small = [a for a in live if a.get("bytes", 0) < target_bytes]
-    if len(small) < 2:
-        return {"version": base, "files_compacted": 0,
-                "files_total": len(live)}
-    total = sum(a.get("bytes", 0) for a in small)
-    n_out = max(1, -(-total // target_bytes))  # ceil
-    df = _read_adds(spark, table, small).coalesce(n_out)
-    adds = _write_data_files(df, table, base + 1, stat_cols, None)
-    version = _commit_retry(
-        table, "compact", adds, [a["path"] for a in small],
-        df.schema.json(), base, checkpoint_every,
-        require_unchanged={a["path"]: a for a in small},
-    )
-    return {"version": version, "files_compacted": len(small),
-            "files_total": len(live)}
+    materialize their deletes on the way through. This is
+    ``compact_where`` with an empty (match-all) predicate."""
+    return compact_where(spark, table, [], target_bytes=target_bytes,
+                         stat_cols=stat_cols,
+                         checkpoint_every=checkpoint_every)
 
 
 def maintain(
@@ -2097,6 +2134,27 @@ def read_table(
 # -------------------------------------------------- DELETE / restore
 
 
+def _dml_candidates(table: str, predicate):
+    """The shared prologue of predicate DML (delete / update /
+    replaceWhere): ``(base, live, tuples_p, expr, cands)``. ``predicate``
+    is a ``(col, op, literal)`` conjunction list — translated to
+    physical names for the stats prune (``tuples_p``) and rendered as a
+    Spark SQL ``expr`` — or a raw SQL boolean string, which prunes
+    nothing (``tuples_p`` None, every live file a candidate)."""
+    base = table_version(table)
+    if base < 0:
+        raise FileNotFoundError(f"no such table: {table}")
+    live = live_files(table)
+    tuples = predicate if isinstance(predicate, list) else None
+    tuples_p = _cm_tuples(table_column_mapping(table), tuples)
+    expr = _predicate_to_expr(tuples) if tuples else predicate
+    cands = (
+        [a for a in live if _file_may_match(a, tuples_p)]
+        if tuples else list(live)
+    )
+    return base, live, tuples_p, expr, cands
+
+
 def delete_where(
     spark: SparkSession, table: str, predicate,
     mode: str = "dv", stat_cols: list[str] | None = None,
@@ -2129,18 +2187,7 @@ def delete_where(
 
     if mode not in ("dv", "rewrite"):
         raise ValueError(f"delete_where mode must be 'dv'|'rewrite': {mode}")
-    base = table_version(table)
-    if base < 0:
-        raise FileNotFoundError(f"no such table: {table}")
-    live = live_files(table)
-    cm = table_column_mapping(table)
-    tuples = predicate if isinstance(predicate, list) else None
-    tuples_p = _cm_tuples(cm, tuples)  # stats keys are physical
-    expr = _predicate_to_expr(tuples) if tuples else predicate
-    cands = (
-        [a for a in live if _file_may_match(a, tuples_p)]
-        if tuples else list(live)
-    )
+    base, live, tuples_p, expr, cands = _dml_candidates(table, predicate)
     noop = {"version": base, "rows_deleted": 0, "files_touched": 0,
             "files_total": len(live)}
     if not cands:
@@ -2156,24 +2203,15 @@ def delete_where(
     # files drop as metadata while pre-spec files (no partition
     # evidence in the log) fall through to the DV/rewrite scan below —
     # one atomic commit covers both.
-    meta_matched, undecided = _metadata_match_split(table, cands, tuples_p)
+    meta_matched, cands = _metadata_match_split(table, cands, tuples_p)
     meta_removes = [a["path"] for a in meta_matched]
     meta_rows = int(sum(a["rows"] for a in meta_matched)) - sum(
         d.get("count", 0) for d in _dv_entries(meta_matched)
     )
-    if not undecided:
-        if not meta_matched:
-            return noop
-        version = _commit_retry(
-            table, "delete", [], meta_removes, schema,
-            base, checkpoint_every,
-        )
-        return {"version": version, "rows_deleted": meta_rows,
-                "files_touched": len(meta_matched),
-                "files_total": len(live)}
-    cands = undecided  # scan machinery below touches only these
+    touched: list[dict] = []  # scanned files rewritten without matches
+    scan_rows = 0
 
-    if mode == "rewrite":
+    if cands and mode == "rewrite":
         # touch detection: bounded collect — one row per candidate file
         scan = _read_adds(spark, table, cands, lineage=True)
         per_file = {
@@ -2181,109 +2219,122 @@ def delete_where(
             for r in scan.filter(F.expr(expr))
             .groupBy("__dl_file").agg(F.count("*").alias("n")).collect()
         }
-        if not per_file and not meta_matched:
-            return noop
         touched = [a for a in cands if _log_rel(a["path"]) in per_file]
-        adds = []
-        if touched:
-            survivors = _read_adds(spark, table, touched).filter(
-                ~F.coalesce(F.expr(expr), F.lit(False))
+        scan_rows = sum(per_file.values())
+    elif cands:
+        # ---- mode == "dv": harvest matching positions, consolidate
+        rs = _physical_read_schema(_snapshot(table, base))
+        raw = (
+            spark.read.schema(rs) if rs is not None
+            else spark.read.option("mergeSchema", "true")
+        ).parquet(
+            *[os.path.join(table, a["path"]) for a in cands]
+        ).withColumn(
+            "__dl_f", F.col("_metadata.file_path")
+        ).withColumn("__dl_p", F.col("_metadata.row_index"))
+        # the predicate is LOGICAL; the raw scan carries physical names —
+        # translate after the _metadata lineage columns are materialized
+        raw = _to_logical_df(raw, table_column_mapping(table),
+                             keep=("__dl_f", "__dl_p"))
+        # sidecars store the rel tail: translate scan path → rel on the
+        # O(files) metadata side (no per-row regex over the path string)
+        rev = [(absq, rel)
+               for rel, absq in _scan_path_pairs(spark, table, cands)]
+        if len(rev) <= _PATH_MAP_LITERAL_MAX:
+            new_pos = raw.filter(F.expr(expr)).select(
+                _path_map_col(rev, F.col("__dl_f")).alias("file"),
+                F.col("__dl_p").alias("pos"),
             )
-            adds = _write_data_files(
-                survivors, table, base + 1, stat_cols, None
+        else:
+            relmap = spark.createDataFrame(rev, "__dl_f string, file string")
+            new_pos = raw.filter(F.expr(expr)).join(
+                F.broadcast(relmap), "__dl_f", "inner"
+            ).select("file", F.col("__dl_p").alias("pos"))
+        old_dv = _read_dv_positions(spark, table, cands)
+        old_count = sum(d.get("count", 0) for d in _dv_entries(cands))
+        if old_dv is not None:
+            # consolidate: a shared sidecar may also hold positions of
+            # files OUTSIDE this delete's candidate set — restrict to
+            # the candidates so those files keep their (still-live)
+            # sidecars
+            cand_df = spark.createDataFrame(
+                [(_log_rel(a["path"]),) for a in cands], "file string"
             )
-        version = _commit_retry(
-            table, "delete", adds,
-            meta_removes + [a["path"] for a in touched], schema,
-            base, checkpoint_every,
-            require_unchanged={a["path"]: a for a in touched},
-        )
-        return {"version": version,
-                "rows_deleted": meta_rows + sum(per_file.values()),
-                "files_touched": len(meta_matched) + len(touched),
-                "files_total": len(live)}
-
-    # ---- mode == "dv": harvest matching positions, consolidate, commit
-    rs = _physical_read_schema(_snapshot(table, base))
-    raw = (
-        spark.read.schema(rs) if rs is not None
-        else spark.read.option("mergeSchema", "true")
-    ).parquet(
-        *[os.path.join(table, a["path"]) for a in cands]
-    ).withColumn(
-        "__dl_f", F.col("_metadata.file_path")
-    ).withColumn("__dl_p", F.col("_metadata.row_index"))
-    # the predicate is LOGICAL; the raw scan carries physical names —
-    # translate after the _metadata lineage columns are materialized
-    raw = _to_logical_df(raw, cm, keep=("__dl_f", "__dl_p"))
-    # sidecars store the rel tail: translate scan path → rel on the
-    # O(files) metadata side (no per-row regex over the path string)
-    rev = [(absq, rel) for rel, absq in _scan_path_pairs(spark, table, cands)]
-    if len(rev) <= _PATH_MAP_LITERAL_MAX:
-        new_pos = raw.filter(F.expr(expr)).select(
-            _path_map_col(rev, F.col("__dl_f")).alias("file"),
-            F.col("__dl_p").alias("pos"),
-        )
-    else:
-        relmap = spark.createDataFrame(rev, "__dl_f string, file string")
-        new_pos = raw.filter(F.expr(expr)).join(
-            F.broadcast(relmap), "__dl_f", "inner"
-        ).select("file", F.col("__dl_p").alias("pos"))
-    old_dv = _read_dv_positions(spark, table, cands)
-    old_count = sum(d.get("count", 0) for d in _dv_entries(cands))
-    if old_dv is not None:
-        # consolidate: a shared sidecar may also hold positions of
-        # files OUTSIDE this delete's candidate set — restrict to the
-        # candidates so those files keep their (still-live) sidecars
-        cand_df = spark.createDataFrame(
-            [(_log_rel(a["path"]),) for a in cands], "file string"
-        )
-        old_pos = old_dv.join(F.broadcast(cand_df), "file", "inner")
-        all_pos = new_pos.unionByName(old_pos).distinct()
-    else:
-        all_pos = new_pos
-    token = uuid.uuid4().hex[:8]
-    rel_dv = os.path.join(_DV_DIR, f"{base + 1:05d}-{token}")
-    out_dir = os.path.join(table, rel_dv)
-    all_pos.write.mode("overwrite").parquet(out_dir)
-    counts = {
-        r["file"]: r["n"]
-        for r in spark.read.schema("file string, pos bigint")
-        .parquet(out_dir)
-        .groupBy("file").agg(F.count("*").alias("n")).collect()
-    }
-    if not counts:
+            old_pos = old_dv.join(F.broadcast(cand_df), "file", "inner")
+            all_pos = new_pos.unionByName(old_pos).distinct()
+        else:
+            all_pos = new_pos
+        token = uuid.uuid4().hex[:8]
+        rel_dv = os.path.join(_DV_DIR, f"{base + 1:05d}-{token}")
+        out_dir = os.path.join(table, rel_dv)
+        all_pos.write.mode("overwrite").parquet(out_dir)
+        counts = {
+            r["file"]: r["n"]
+            for r in spark.read.schema("file string, pos bigint")
+            .parquet(out_dir)
+            .groupBy("file").agg(F.count("*").alias("n")).collect()
+        }
+        if counts:
+            new_adds = []
+            for a in cands:
+                n = counts.get(_log_rel(a["path"]), 0)
+                if n > 0:
+                    na = {k: v for k, v in a.items() if k != "dv"}
+                    na["dv"] = [{"path": rel_dv, "count": int(n)}]
+                    new_adds.append(na)
+            version = _commit_retry(
+                table, "delete_dv", new_adds, meta_removes, schema, base,
+                checkpoint_every,
+                require_unchanged={
+                    a["path"]: next(c for c in cands if c["path"] == a["path"])
+                    for a in new_adds
+                },
+            )
+            return {
+                "version": version,
+                "rows_deleted": (meta_rows + int(sum(counts.values()))
+                                 - old_count),
+                "files_touched": len(meta_matched) + len(new_adds),
+                "files_total": len(live),
+            }
         shutil.rmtree(out_dir, ignore_errors=True)  # no scanned match
-        if not meta_matched:
-            return noop
-        version = _commit_retry(
-            table, "delete", [], meta_removes, schema,
-            base, checkpoint_every,
+
+    if not meta_matched and not touched:
+        return noop
+    survivors = [
+        _read_adds(spark, table, touched).filter(
+            ~F.coalesce(F.expr(expr), F.lit(False))
         )
-        return {"version": version, "rows_deleted": meta_rows,
-                "files_touched": len(meta_matched),
-                "files_total": len(live)}
-    new_adds = []
-    for a in cands:
-        n = counts.get(_log_rel(a["path"]), 0)
-        if n > 0:
-            na = {k: v for k, v in a.items() if k != "dv"}
-            na["dv"] = [{"path": rel_dv, "count": int(n)}]
-            new_adds.append(na)
-    version = _commit_retry(
-        table, "delete_dv", new_adds, meta_removes, schema, base,
-        checkpoint_every,
-        require_unchanged={
-            a["path"]: next(c for c in cands if c["path"] == a["path"])
-            for a in new_adds
-        },
+    ] if touched else []
+    version = _rewrite_commit(
+        spark, table, "delete", base, survivors, touched, schema,
+        checkpoint_every, stat_cols, dropped=meta_removes,
     )
-    return {
-        "version": version,
-        "rows_deleted": meta_rows + int(sum(counts.values())) - old_count,
-        "files_touched": len(meta_matched) + len(new_adds),
-        "files_total": len(live),
-    }
+    return {"version": version, "rows_deleted": meta_rows + scan_rows,
+            "files_touched": len(meta_matched) + len(touched),
+            "files_total": len(live)}
+
+
+def _set_projection(frame: DataFrame, schema, set_exprs: dict[str, str],
+                    hit) -> DataFrame:
+    """SQL UPDATE's SET as one projection of ``frame`` onto the table
+    columns of ``schema``: on rows where ``hit`` is true (NULL counts
+    as false), each SET column takes its expression evaluated against
+    the PRE-update row (``SET a = b, b = a`` swaps), cast back to the
+    column's type; every other value passes through. Generated
+    partition columns need no step here — the writer re-derives them
+    from the updated row (derived always wins)."""
+    from pyspark.sql import functions as F
+
+    hit = F.coalesce(hit, F.lit(False))
+    return frame.select(*[
+        F.when(hit, F.expr(set_exprs[f.name]))
+        .otherwise(F.col(f.name))
+        .cast(f.dataType)
+        .alias(f.name)
+        if f.name in set_exprs else F.col(f.name)
+        for f in schema.fields
+    ])
 
 
 def update_where(
@@ -2312,17 +2363,7 @@ def update_where(
     "files_total"}."""
     from pyspark.sql import functions as F
 
-    base = table_version(table)
-    if base < 0:
-        raise FileNotFoundError(f"no such table: {table}")
-    tuples = predicate if isinstance(predicate, list) else None
-    tuples_p = _cm_tuples(table_column_mapping(table), tuples)
-    expr = _predicate_to_expr(tuples) if tuples else predicate
-    live = live_files(table)
-    cands = (
-        [a for a in live if _file_may_match(a, tuples_p)]
-        if tuples else list(live)
-    )
+    base, live, _tuples_p, expr, cands = _dml_candidates(table, predicate)
     noop = {"version": base, "rows_updated": 0, "files_rewritten": 0,
             "files_total": len(live)}
     if not cands:
@@ -2346,29 +2387,11 @@ def update_where(
         return noop
     touched = [a for a in cands if _log_rel(a["path"]) in per_file]
     existing = _read_adds(spark, table, touched)
-    hit = F.coalesce(F.expr(expr), F.lit(False))
-    updated = existing.select(*[
-        F.when(hit, F.expr(set_exprs[c]))
-        .otherwise(F.col(c))
-        .cast(existing.schema[c].dataType)
-        .alias(c)
-        if c in set_exprs else F.col(c)
-        for c in existing.columns
-    ])
-    # generated partition columns re-derive after the SET (derived
-    # always wins — updating year(day)'s source column must move the
-    # row's partition, never leave a stale generated value behind)
-    for c, e in (table_partition_exprs(table) or {}).items():
-        if c in updated.columns:
-            updated = updated.withColumn(
-                c, F.expr(e).cast(existing.schema[c].dataType)
-            )
-    adds = _write_data_files(updated, table, base + 1, stat_cols, None)
-    _validate_constraints(spark, table, adds)
-    version = _commit_retry(
-        table, "update", adds, [a["path"] for a in touched], schema,
-        base, checkpoint_every,
-        require_unchanged={a["path"]: a for a in touched},
+    updated = _set_projection(existing, existing.schema, set_exprs,
+                              F.expr(expr))
+    version = _rewrite_commit(
+        spark, table, "update", base, [updated], touched, schema,
+        checkpoint_every, stat_cols, check=True,
     )
     return {
         "version": version,
@@ -2405,11 +2428,7 @@ def overwrite_where(
     """
     from pyspark.sql import functions as F
 
-    base = table_version(table)
-    if base < 0:
-        raise FileNotFoundError(f"no such table: {table}")
-    tuples = predicate if isinstance(predicate, list) else None
-    expr = _predicate_to_expr(tuples) if tuples else predicate
+    base, _live, tuples_p, expr, cands = _dml_candidates(table, predicate)
     if validate:
         n_out = df.filter(~F.coalesce(F.expr(expr), F.lit(False))).count()
         if n_out:
@@ -2418,12 +2437,6 @@ def overwrite_where(
                 f"the predicate ({expr}) — refusing to write outside the "
                 "declared replace scope"
             )
-    live = live_files(table)
-    tuples_p = _cm_tuples(table_column_mapping(table), tuples)
-    cands = (
-        [a for a in live if _file_may_match(a, tuples_p)]
-        if tuples else list(live)
-    )
     # one distributed pass over the candidates: per file, how many rows
     # match vs total (bounded collect: one row per candidate file) —
     # UNLESS the predicate is wholly decidable on partition columns,
@@ -2458,25 +2471,19 @@ def overwrite_where(
                 removed_whole.append(a["path"])  # pure metadata drop
             else:
                 boundary.append(a)
-    adds: list[dict] = []
-    if boundary:
-        survivors = _read_adds(spark, table, boundary).filter(
+    survivors = [
+        _read_adds(spark, table, boundary).filter(
             ~F.coalesce(F.expr(expr), F.lit(False))
         )
-        adds += _write_data_files(survivors, table, base + 1, stat_cols, None)
-    adds += _write_data_files(df, table, base + 1, stat_cols, None)
-    _validate_constraints(spark, table, adds)
-    # boundary rewrites were DERIVED from their snapshot actions — a
-    # concurrent DV-delete re-adding one with a fatter DV would have its
-    # tombstones resurrected by our stale-survivor rewrite (lost update),
-    # so those must be unchanged. Whole-file drops are safe regardless:
-    # every physical row matches the predicate, so a concurrently fatter
-    # DV deletes a subset of what the drop deletes anyway.
-    version = _commit_retry(
-        table, "replace_where", adds,
-        removed_whole + [a["path"] for a in boundary],
-        df.schema.json(), base, checkpoint_every,
-        require_unchanged={a["path"]: a for a in boundary},
+    ] if boundary else []
+    # boundary files are rewritten (guarded: their survivors derive from
+    # the snapshot); whole-file drops are not — every physical row
+    # matches the predicate, so a concurrently fatter DV deletes a
+    # subset of what the drop deletes anyway
+    version = _rewrite_commit(
+        spark, table, "replace_where", base, survivors + [df], boundary,
+        df.schema.json(), checkpoint_every, stat_cols,
+        dropped=removed_whole, check=True,
     )
     return {
         "version": version,
@@ -2501,11 +2508,9 @@ def purge_dv(
     if not dvd:
         return {"version": base, "files_purged": 0}
     df = _read_adds(spark, table, dvd)
-    adds = _write_data_files(df, table, base + 1, stat_cols, cluster_by)
-    version = _commit_retry(
-        table, "purge", adds, [a["path"] for a in dvd], df.schema.json(),
-        base, checkpoint_every,
-        require_unchanged={a["path"]: a for a in dvd},
+    version = _rewrite_commit(
+        spark, table, "purge", base, [df], dvd, df.schema.json(),
+        checkpoint_every, stat_cols, cluster_by,
     )
     return {"version": version, "files_purged": len(dvd)}
 
@@ -2585,7 +2590,7 @@ def add_check_constraint(
             )
 
     _validate(base)
-    while True:
+    for _attempt in _commit_attempts(table, "set_constraint"):
         # TOCTOU guard: the validation scan only proves the table at
         # ``base``. If a concurrent writer (who read table_constraints
         # BEFORE this commit lands) moved the head, re-validate against
@@ -2618,7 +2623,7 @@ def drop_check_constraint(
     if name not in table_constraints(table):
         raise KeyError(f"no such constraint on {table}: {name}")
     schema = _snapshot(table, table_version(table))["schema"]
-    while True:
+    for _attempt in _commit_attempts(table, "drop_constraint"):
         version = table_version(table) + 1
         actions = [
             {"commit": {"version": version, "operation": "drop_constraint",
@@ -3035,6 +3040,7 @@ def merge_into(
     Returns {"version", "files_rewritten", "files_total"}.
     """
     from pyspark.sql import functions as F
+    from pyspark.sql import types as ST
 
     if when_matched not in ("replace", "delete", "update"):
         raise ValueError(
@@ -3048,9 +3054,32 @@ def merge_into(
     keys = [on] if isinstance(on, str) else list(on)
     base = table_version(table)
     live = live_files(table)
+    noop = {"version": base, "files_rewritten": 0, "files_total": len(live)}
     if txn is not None and last_txn_batch(table, txn[0]) >= txn[1]:
-        return {"version": base, "files_rewritten": 0,
-                "files_total": len(live)}  # replayed txn: no-op
+        return noop  # replayed txn: no-op
+    schema = _snapshot(table, base)["schema"]
+    # a source key of another type than the table declares would either
+    # crash the key-range prune (str vs int) or, unpruned, commit and
+    # silently re-declare the column over files of the old type; numeric
+    # keys of different widths compare fine and keep merging
+    decl = (
+        {f.name: f.dataType
+         for f in ST.StructType.fromJson(json.loads(schema)).fields}
+        if schema else {}
+    )
+    src_types = {f.name: f.dataType for f in source.schema.fields}
+    for k in keys:
+        want, got = decl.get(k), src_types.get(k)
+        if want is None or got is None or want == got or (
+            isinstance(want, ST.NumericType)
+            and isinstance(got, ST.NumericType)
+        ):
+            continue
+        raise ValueError(
+            f"merge_into: source key {k!r} is {got.simpleString()} but "
+            f"the table declares {want.simpleString()} — cast the source "
+            "key to the table's type first"
+        )
     # one 1-row job: per-key range + the null-key guard (a null merge
     # key can never match, so it would be re-INSERTED on every CDC
     # apply — silently non-idempotent; Delta rejects it too)
@@ -3059,8 +3088,7 @@ def merge_into(
         aggs += [F.min(k), F.max(k), F.sum(F.col(k).isNull().cast("long"))]
     row = source.agg(*aggs).collect()[0]
     if row[0] == 0:  # empty source: nothing to do, no empty-file commit
-        return {"version": base, "files_rewritten": 0,
-                "files_total": len(live)}
+        return noop
     ranges = {}
     for i, k in enumerate(keys):
         lo, hi, nn = row[1 + 3 * i], row[2 + 3 * i], row[3 + 3 * i]
@@ -3111,31 +3139,15 @@ def merge_into(
     touched_adds = [
         a for a in candidates if _log_rel(a["path"]) in touched_set
     ]
-    removes = [a["path"] for a in touched_adds]
 
     if when_matched == "delete":
         if not touched_adds:  # no key present: nothing to delete
-            return {"version": base, "files_rewritten": 0,
-                    "files_total": len(live)}
+            return noop
         existing = _read_adds(spark, table, touched_adds)
-        survivors = existing.join(src_keys, on=keys, how="left_anti")
         # fully-deleted files leave 0-row shards, which
         # _write_data_files already drops from the commit
-        adds = _write_data_files(survivors, table, base + 1, stat_cols,
-                                 cluster_by=keys if stat_cols else None)
-        version = _commit_retry(
-            table, "merge_delete", adds, removes,
-            _snapshot(table, base)["schema"], base, checkpoint_every,
-            txn=txn,
-            require_unchanged={a["path"]: a for a in touched_adds},
-        )
-        return {
-            "version": version,
-            "files_rewritten": len(touched_adds),
-            "files_total": len(live),
-        }
-
-    if when_matched == "update":
+        rewritten = existing.join(src_keys, on=keys, how="left_anti")
+    elif when_matched == "update":
         # MERGE ... WHEN MATCHED THEN UPDATE SET col = expr — exprs see
         # the PRE-update target row plus the source row's columns as
         # ``src_<col>`` (simultaneous assignment, like update_where).
@@ -3167,16 +3179,8 @@ def merge_into(
                     f"merge update SET columns not in the table: {bad}"
                 )
             j = existing.join(F.broadcast(src_pref), on=keys, how="left")
-            hit = F.coalesce(F.col("__dl_m"), F.lit(False))
-            updated = j.select(*[
-                F.when(hit, F.expr(set_exprs[c]))
-                .otherwise(F.col(c))
-                .cast(existing.schema[c].dataType)
-                .alias(c)
-                if c in set_exprs else F.col(c)
-                for c in existing.columns
-            ])
-            parts.append(updated)
+            parts.append(_set_projection(j, existing.schema, set_exprs,
+                                         F.col("__dl_m")))
             matched_keys = (
                 existing.select(*keys)
                 .join(F.broadcast(src_keys), on=keys, how="inner")
@@ -3189,21 +3193,10 @@ def merge_into(
                                       how="left_anti")
             parts.append(inserts)
         if not parts:
-            return {"version": base, "files_rewritten": 0,
-                    "files_total": len(live)}
+            return noop
         rewritten = parts[0]
         for p in parts[1:]:
             rewritten = rewritten.unionByName(p)
-        # generated partition columns re-derive after the SET (same
-        # rule as update_where: derived always wins)
-        pex = table_partition_exprs(table) or {}
-        if pex and touched_adds:
-            sch = _read_adds(spark, table, touched_adds[:1]).schema
-            for c, e2 in pex.items():
-                if c in rewritten.columns:
-                    rewritten = rewritten.withColumn(
-                        c, F.expr(e2).cast(sch[c].dataType)
-                    )
     elif touched_adds:
         existing = _read_adds(spark, table, touched_adds)
         # rewrite = unmatched existing rows + ALL source rows (update
@@ -3212,15 +3205,13 @@ def merge_into(
         rewritten = survivors.unionByName(source)
     else:
         rewritten = source
-    adds = _write_data_files(
-        rewritten, table, base + 1, stat_cols,
-        cluster_by=keys if stat_cols else None,
-    )
-    _validate_constraints(spark, table, adds)
-    version = _commit_retry(
-        table, "merge", adds, removes,
-        rewritten.schema.json(), base, checkpoint_every, txn=txn,
-        require_unchanged={a["path"]: a for a in touched_adds},
+    deleting = when_matched == "delete"
+    version = _rewrite_commit(
+        spark, table, "merge_delete" if deleting else "merge", base,
+        [rewritten], touched_adds,
+        schema if deleting else rewritten.schema.json(), checkpoint_every,
+        stat_cols, cluster_by=keys if stat_cols else None,
+        check=not deleting, txn=txn,
     )
     return {
         "version": version,
@@ -3324,7 +3315,6 @@ def compact_zorder(
     single-column predicates on ANY of them prune files afterwards."""
     base = table_version(table)
     current = live_files(table)
-    removes = [a["path"] for a in current]
     df = _read_adds(spark, table, current)
     z = zorder_expr(df, zorder_by, bits)
     n = num_files or max(1, len(current) // 2)
@@ -3334,11 +3324,9 @@ def compact_zorder(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    adds = _write_data_files(clustered, table, base + 1, zorder_by, None)
-    return _commit_retry(
-        table, "compact", adds, removes, df.schema.json(), base,
-        checkpoint_every,
-        require_unchanged={a["path"]: a for a in current},
+    return _rewrite_commit(
+        spark, table, "compact", base, [clustered], current,
+        df.schema.json(), checkpoint_every, zorder_by,
     )
 
 
@@ -3411,7 +3399,7 @@ def table_changes(
             raise ValueError(f"version {v} vacuumed from the log: {table}")
         actions = _read_actions(p)
         op = next(a["commit"]["operation"] for a in actions if "commit" in a)
-        if op in ("compact", "purge"):
+        if op in _NO_DATA_CHANGE_OPS:
             continue
         pre = _snapshot(table, v - 1)["adds"] if v > 0 else {}
         add_acts = [a["add"] for a in actions if "add" in a]

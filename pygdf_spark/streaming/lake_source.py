@@ -191,8 +191,9 @@ class DeltaliteStreamReader(DataSourceStreamReader):
             replaces_live = any(a["path"] in live for a in adds)
             is_change = bool(removes) or replaces_live
             # compact/purge rewrite files but change NO logical rows
-            # (the dataChange=false analog): never an error, never data
-            if op in ("compact", "purge"):
+            # (the dataChange=false analog) and constraint commits carry
+            # no files: never an error, never data
+            if op in dl._NO_DATA_CHANGE_OPS:
                 pass
             elif not is_change:
                 # append-like by content: all-new files, nothing removed
@@ -612,8 +613,7 @@ class DeltaliteChangeFeedReader(DataSourceStreamReader):
             op = next(
                 a["commit"]["operation"] for a in actions if "commit" in a
             )
-            if op in ("compact", "purge", "set_constraint",
-                      "drop_constraint"):
+            if op in dl._NO_DATA_CHANGE_OPS:
                 continue
             pre = dl._snapshot(self.table, v - 1)["adds"] if v > 0 else {}
             add_acts = [a["add"] for a in actions if "add" in a]

@@ -6,6 +6,7 @@ the CHECK-constraint TOCTOU re-validation."""
 
 from __future__ import annotations
 
+import os
 import threading
 import time
 
@@ -111,6 +112,49 @@ def test_logstore_put_if_absent_is_the_race_primitive(spark, table):
         assert dl.read_table(spark, table).count() == 18
     finally:
         dl.set_log_store(prev)
+
+
+class AlwaysLosesLogStore(dl.LocalLogStore):
+    """Every put-if-absent reports a lost race — what a backend whose
+    listing lags its put-if-absent looks like to a committer. Calls are
+    counted and capped, so an unbounded retry loop fails the test
+    instead of hanging it."""
+
+    CAP = 10_000
+
+    def __init__(self):
+        self.calls = 0
+
+    def put_if_absent(self, path, data):
+        self.calls += 1
+        if self.calls > self.CAP:
+            raise AssertionError("commit retry loop is unbounded")
+        raise FileExistsError(path)
+
+
+@pytest.mark.parametrize("op", ["append", "add_constraint",
+                                "drop_constraint"])
+def test_commit_retries_are_bounded(spark, table, op):
+    df = spark.createDataFrame([(1,)], "x int")
+    dl.append(df, table)
+    dl.add_check_constraint(spark, table, "pos", "x > 0")
+    ops = {
+        "append": lambda: dl.append(df, table),
+        "add_constraint": lambda: dl.add_check_constraint(
+            spark, table, "small", "x < 10"),
+        "drop_constraint": lambda: dl.drop_check_constraint(table, "pos"),
+    }
+    store = AlwaysLosesLogStore()
+    prev = dl.set_log_store(store)
+    try:
+        with pytest.raises(dl.ConcurrentWriteError) as err:
+            ops[op]()
+    finally:
+        dl.set_log_store(prev)
+    assert store.calls == dl._MAX_COMMIT_ATTEMPTS
+    assert f"{dl._MAX_COMMIT_ATTEMPTS} times" in str(err.value)
+    assert dl.table_version(table) == 1
+    assert dl.table_constraints(table) == {"pos": "x > 0"}
 
 
 # ---------------------------------------------- distributed stats harvest
@@ -426,6 +470,42 @@ def test_merge_delete_no_match_is_noop(spark, table):
     assert dl.table_version(table) == 0  # no commit published
 
 
+# ------------------------------------------------- MERGE key types
+
+
+def _data_files(table):
+    return sorted(
+        os.path.relpath(os.path.join(d, n), table)
+        for d, _dirs, names in os.walk(os.path.join(table, "data"))
+        for n in names
+    )
+
+
+@pytest.mark.parametrize("stat_cols", [["k"], None])
+def test_merge_rejects_mismatched_key_type(spark, table, stat_cols):
+    """A string key into a long table: with stats the key-range prune
+    would compare str with int, without stats the merge would commit and
+    re-declare the column over INT64 files. Both refuse up front."""
+    dl.append(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
+              table, stat_cols=stat_cols)
+    files = _data_files(table)
+    src = spark.createDataFrame([("2", "B"), ("3", "c")], "k string, v string")
+    with pytest.raises(ValueError, match="'k'"):
+        dl.merge_into(spark, table, src, on="k", stat_cols=stat_cols)
+    assert dl.table_version(table) == 0
+    assert _data_files(table) == files  # nothing written
+
+
+def test_merge_int_key_into_long_table_still_merges(spark, table):
+    dl.append(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
+              table, stat_cols=["k"])
+    src = spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string")
+    res = dl.merge_into(spark, table, src, on="k", stat_cols=["k"])
+    assert res["version"] == 1 and res["files_rewritten"] == 1
+    got = sorted((r["k"], r["v"]) for r in dl.read_table(spark, table).collect())
+    assert got == [(1, "a"), (2, "B"), (3, "c")]
+
+
 # --------------------- rewrite-vs-DV-delete lost-update (r7 review #5)
 #
 # Every rewrite-style commit (compact / delete rewrite / merge /
@@ -462,20 +542,28 @@ def _vals(spark, table):
 
 @pytest.mark.parametrize("op", ["compact", "purge", "delete_rewrite",
                                 "merge", "merge_delete", "replace_where",
-                                "update"])
+                                "update", "compact_where",
+                                "compact_small_files", "compact_zorder",
+                                "merge_update"])
 def test_rewrite_never_resurrects_concurrent_dv_delete(
     spark, table, monkeypatch, op
 ):
-    dl.append(
-        spark.createDataFrame([(i,) for i in range(1, 7)], "x int"),
-        table, stat_cols=["x"],
+    # merge-update needs a non-key column to SET
+    rows, ddl = (
+        ([(i, 0) for i in range(1, 7)], "x int, y int")
+        if op == "merge_update" else ([(i,) for i in range(1, 7)], "x int")
     )
-    # ONE live file, so the racing DV-delete provably hits the same
-    # file the op under test rewrites (scattered layouts where the op
+    dl.append(spark.createDataFrame(rows, ddl), table, stat_cols=["x"])
+    # ONE live file holding x=3, so the racing DV-delete provably hits
+    # a file the op under test rewrites (scattered layouts where the op
     # touches a different file are benign and shouldn't raise)
     dl.compact(spark, table, num_files=1, stat_cols=["x"])
     if op == "purge":  # purge needs an outstanding DV to touch the file
         dl.delete_where(spark, table, [("x", "=", 6)], mode="dv")
+    if op in ("compact_where", "compact_small_files"):
+        # bin-packing leaves a lone small file alone: give it a second
+        dl.append(spark.createDataFrame([(7,)], "x int"), table,
+                  stat_cols=["x"])
 
     def racing():
         dl.delete_where(spark, table, [("x", "=", 3)], mode="dv")
@@ -495,11 +583,20 @@ def test_rewrite_never_resurrects_concurrent_dv_delete(
             [("x", ">=", 5)]),
         "update": lambda: dl.update_where(
             spark, table, [("x", "=", 5)], {"x": "x + 100"}),
+        "compact_where": lambda: dl.compact_where(
+            spark, table, [("x", ">=", 1)]),
+        "compact_small_files": lambda: dl.compact_small_files(spark, table),
+        "compact_zorder": lambda: dl.compact_zorder(spark, table, ["x"]),
+        "merge_update": lambda: dl.merge_into(
+            spark, table, spark.createDataFrame([(5, 9)], "x int, y int"),
+            on="x", when_matched="update", set_exprs={"y": "src_y"}),
     }
     header = {"compact": "compact", "purge": "purge",
               "delete_rewrite": "delete", "merge": "merge",
               "merge_delete": "merge_delete",
-              "replace_where": "replace_where", "update": "update"}
+              "replace_where": "replace_where", "update": "update",
+              "compact_where": "compact", "compact_small_files": "compact",
+              "compact_zorder": "compact", "merge_update": "merge"}
     _race_once(monkeypatch, spark, table, header[op], racing)
     with pytest.raises(dl.ConcurrentWriteError):
         ops[op]()
