@@ -21,6 +21,7 @@ Determinism discipline (critical for the DuckDB oracle hash-compare):
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -76,6 +77,26 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     if est < n:
         return df.repartition(n)
     return df
+
+
+@contextmanager
+def shuffle_width(spark: SparkSession, n: int):
+    """Scope the session's shuffle partition count to ``n`` for the
+    body, then restore the previous value (or unset it, if it was
+    unset). Bounded verification inputs use it where the width is
+    fixed at execution: streaming state stores (one per shuffle
+    partition, part of the checkpoint, never coalesced by AQE) and the
+    eager localCheckpoint rounds of the graph operators."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+        else:
+            spark.conf.unset(key)
 
 
 def pin_session_confs(spark: SparkSession) -> None:

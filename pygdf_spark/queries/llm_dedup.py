@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from pygdf_spark.functions.hashing import MERSENNE_P, md5_mod, minhash_perm_sql
 from pygdf_spark.operators import dedup as D
 from pygdf_spark.operators.text import ngrams
-from pygdf_spark.queries._util import T, spread
+from pygdf_spark.queries._util import T, shuffle_width, spread
 
 _SHINGLE_SQL = r"""
 shingles AS (
@@ -253,16 +253,9 @@ def graph_connected_components(spark, sf_dir):
     ).filter(F.col("b").isNotNull())
     # the propagation rounds execute eagerly (localCheckpoint); scope
     # the shuffle width to the bounded verification input the same way
-    # run_available_now does for streaming state stores
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # run_stream does for streaming state stores
+    with shuffle_width(spark, 8):
         cc = connected_components(chain)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     comps = cc.groupBy("comp").agg(F.count(F.lit(1)).alias("n_orders"))
     return comps.orderBy("comp")
 
@@ -326,16 +319,9 @@ def graph_bfs_hops(spark, sf_dir):
         )
         .select("a", "b")
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         dist = bfs_hops(chain.union(skips), heads.select("id"),
                         max_iter=16)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     return (
         dist.groupBy("hop")
         .agg(F.count(F.lit(1)).alias("n_vertices"))
@@ -642,15 +628,8 @@ def graph_pagerank(spark, sf_dir):
         (F.lit(2_000_000_000) + F.col("l_partkey")).alias("b"),
     ).distinct()
     edges = e0.union(e0.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         pr = pagerank_micro(edges, iters=5)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     return pr.orderBy(F.col("rank_micro").desc(), F.col("id").asc()).limit(20)
 
 
@@ -700,15 +679,8 @@ def pipeline_neardup_prune(spark, sf_dir):
     d = T(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_dedup(d, num_perms=6, threshold=0.05)
     edges = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         cc = connected_components(edges)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
     # comp label IS the min member id == the kept representative
     removed = cc.filter(F.col("id") != F.col("comp")).select(
         F.col("id").alias("doc_id")
@@ -995,15 +967,8 @@ def graph_triangle_count(spark, sf_dir):
         .select("a", "b")
         .distinct()
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with shuffle_width(spark, 8):
         return triangle_count(edges)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
 
 
 GRAPH_TRIANGLE_SQL = """

@@ -15,6 +15,7 @@ from pygdf_spark.streaming import (
     enrich_with_dim,
     read_events_stream,
     run_available_now,
+    run_stream,
     session_counts,
     sliding_counts,
     stateful_change_capture,
@@ -277,23 +278,17 @@ def sstream_lake_source_live(spark, sf_dir):
     dl.append(ev.filter(F.col("event_id") % 3 == 2).repartition(2), table)
 
     register(spark)
-    name = f"lake_src_{os.getpid()}"
-    q = (
+    q = run_stream(
         spark.readStream.format("deltalite").option("path", table).load()
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("event_id").alias("id_sum"),
             F.sum("v_c").alias("value_cents"),
-        )
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "memory", mode="complete", checkpoint=os.path.join(base, "ckpt"),
     )
-    q.awaitTermination(300)
-    return spark.table(name).orderBy("event_type")
+    return spark.table(q.name).orderBy("event_type")
 
 
 SSTREAM_LAKE_SOURCE_SQL = """
@@ -338,8 +333,7 @@ def sstream_lake_cdf_live(spark, sf_dir):
     )                                                         # v2 (increment)
 
     register(spark)
-    name = f"lake_cdf_{os.getpid()}"
-    q = (
+    q = run_stream(
         spark.readStream.format("deltalite").option("path", table)
         .option("readChangeFeed", "true").load()
         .groupBy("_commit_version", "_change_type")
@@ -347,15 +341,10 @@ def sstream_lake_cdf_live(spark, sf_dir):
             F.count(F.lit(1)).alias("n_rows"),
             F.sum("event_id").alias("id_sum"),
             F.sum("v_c").alias("value_cents"),
-        )
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "memory", mode="complete", checkpoint=os.path.join(base, "ckpt"),
     )
-    q.awaitTermination(300)
-    return spark.table(name).orderBy("_commit_version", "_change_type")
+    return spark.table(q.name).orderBy("_commit_version", "_change_type")
 
 
 SSTREAM_LAKE_CDF_SQL = """

@@ -3206,10 +3206,13 @@ def merge_into(
     else:
         rewritten = source
     deleting = when_matched == "delete"
+    # declare like append: a narrower source key (int into a long
+    # table) must not re-declare the column over the existing files
     version = _rewrite_commit(
         spark, table, "merge_delete" if deleting else "merge", base,
         [rewritten], touched_adds,
-        schema if deleting else rewritten.schema.json(), checkpoint_every,
+        schema if deleting else _union_decl_schema(schema, rewritten.schema),
+        checkpoint_every,
         stat_cols, cluster_by=keys if stat_cols else None,
         check=not deleting, txn=txn,
     )

@@ -29,8 +29,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
-from pygdf_spark.queries._util import dec
+from pygdf_spark.queries._util import dec, shuffle_width
 
 _MEM_IDS = itertools.count()
 
@@ -291,64 +292,71 @@ def view_purchase_join(events: DataFrame, horizon: str = "2 hours") -> DataFrame
     )
 
 
-def run_available_now(
-    sdf: DataFrame, mode: str = "complete", shuffle_partitions: int = 8
-) -> DataFrame:
-    """Execute a streaming DataFrame over exactly the data currently in
-    the source (availableNow) into a memory sink; returns the sink as a
-    batch DataFrame once the stream terminates.
+# Structured Streaming creates one state-store instance per shuffle
+# partition per stateful operator, FIXED at the query's first run (it is
+# part of checkpoint state and AQE never coalesces it). A stream-stream
+# join carries four stores per partition, so an oversized count is pure
+# per-partition open/commit overhead on bounded runs (32 partitions made
+# the interval join ~4x slower than 8 on the sf0.01 gate).
+_STREAM_SHUFFLE_PARTITIONS = 8
+# a bounded availableNow run that has not drained by then is stalled
+_STREAM_TIMEOUT_S = 300
 
-    ``shuffle_partitions`` sizes the state store: Structured Streaming
-    creates one state-store instance per shuffle partition per stateful
-    operator, FIXED at the query's first run (it is part of checkpoint
-    state and AQE never coalesces it). A stream-stream join carries four
-    stores per partition, so an oversized count is pure per-partition
-    open/commit overhead on bounded verification runs (32 partitions
-    made the interval join ~4× slower than 8 on the sf0.01 gate).
-    Production unbounded streams size this to cluster cores × expected
-    key-state volume instead — pass it explicitly there."""
-    spark = sdf.sparkSession
-    name = f"pygdf_stream_sink_{next(_MEM_IDS)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name)
+
+def run_stream(
+    sdf: DataFrame, sink, *, mode: str = "append",
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Run a streaming DataFrame over exactly the data currently in the
+    source (``trigger(availableNow=True)``) and wait for it to finish —
+    the one runner every bounded stream goes through.
+
+    ``sink`` is ``"memory"`` (a uniquely named memory table; read it
+    back with ``spark.table(q.name)``), a parquet directory path, or a
+    ``foreachBatch`` function. The shuffle width is scoped to
+    ``_STREAM_SHUFFLE_PARTITIONS`` while the query runs. A query that
+    has not terminated after ``_STREAM_TIMEOUT_S`` seconds is stopped
+    and ``TimeoutError`` raised, so a stalled stream never hands back a
+    partial sink; a failed query raises ``StreamingQueryException``.
+    Returns the finished query (``name``, ``recentProgress``)."""
+    w = sdf.writeStream.outputMode(mode)
+    if callable(sink):
+        w = w.foreachBatch(sink)
+    elif sink == "memory":
+        w = w.format("memory").queryName(f"pygdf_stream_sink_{next(_MEM_IDS)}")
+    else:
+        w = w.format("parquet").option("path", sink)
+    if checkpoint is not None:
+        w = w.option("checkpointLocation", checkpoint)
+    with shuffle_width(sdf.sparkSession, _STREAM_SHUFFLE_PARTITIONS):
+        q = w.trigger(availableNow=True).start()
+        try:
+            if not q.awaitTermination(_STREAM_TIMEOUT_S):
+                raise TimeoutError(
+                    f"stream {q.name or q.id} did not finish within "
+                    f"{_STREAM_TIMEOUT_S} s; stopped"
+                )
+        finally:
+            q.stop()  # no-op once terminated
+    return q
+
+
+def run_available_now(sdf: DataFrame, mode: str = "complete") -> DataFrame:
+    """``run_stream`` into a memory sink; returns the sink as a batch
+    DataFrame."""
+    return sdf.sparkSession.table(run_stream(sdf, "memory", mode=mode).name)
 
 
 def run_available_now_parquet(
     sdf: DataFrame, path: str, checkpoint: str, mode: str = "append",
-    shuffle_partitions: int = 8,
 ) -> DataFrame:
-    """Like run_available_now but into a real PARQUET sink with a
-    checkpoint — the durable-sink shape production streams use
-    (exactly-once via the checkpoint's offset+commit log; append mode,
-    so aggregations need a watermark that closes their windows).
-    Returns the sink read back as a batch DataFrame."""
+    """``run_stream`` into a real PARQUET sink with a checkpoint — the
+    durable-sink shape production streams use (exactly-once via the
+    checkpoint's offset+commit log; append mode, so aggregations need a
+    watermark that closes their windows). Returns the sink read back as
+    a batch DataFrame."""
+    run_stream(sdf, path, mode=mode, checkpoint=checkpoint)
     spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            sdf.writeStream.format("parquet")
-            .option("path", path)
-            .option("checkpointLocation", checkpoint)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     try:
         return spark.read.parquet(path)
     except Exception:
@@ -357,9 +365,30 @@ def run_available_now_parquet(
         return spark.createDataFrame([], sdf.schema)
 
 
+def _run_txn_batches(sdf: DataFrame, table: str, checkpoint: str,
+                     commit) -> int:
+    """``run_stream`` with a foreachBatch sink into a deltalite table:
+    empty batches are skipped, every other batch is handed to
+    ``commit(bdf, batch_id)``, which makes a txn-stamped commit and
+    returns the table version after it. Returns the number of batches
+    that advanced the version (a replayed batch is a no-op)."""
+    from pygdf_spark.sources import deltalite as dl
+
+    committed = []
+
+    def write_batch(bdf: DataFrame, batch_id: int) -> None:
+        if bdf.isEmpty():
+            return
+        before = dl.table_version(table)
+        if commit(bdf, int(batch_id)) > before:
+            committed.append(batch_id)
+
+    run_stream(sdf, write_batch, checkpoint=checkpoint)
+    return len(committed)
+
+
 def run_available_now_deltalite(
     sdf: DataFrame, table: str, checkpoint: str, app_id: str = "stream",
-    shuffle_partitions: int = 8,
 ) -> int:
     """EXACTLY-ONCE streaming sink into a deltalite table.
 
@@ -377,37 +406,16 @@ def run_available_now_deltalite(
     committed."""
     from pygdf_spark.sources import deltalite as dl
 
-    committed = []
-
-    def write_batch(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
-        before = dl.table_version(table)
-        after = dl.append(bdf, table, txn=(app_id, int(batch_id)))
-        if after > before:
-            committed.append(batch_id)
-
-    spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            sdf.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return len(committed)
+    return _run_txn_batches(
+        sdf, table, checkpoint,
+        lambda bdf, b: dl.append(bdf, table, txn=(app_id, b)),
+    )
 
 
 def run_available_now_lake_merge(
     sdf: DataFrame, table: str, checkpoint: str, on,
     set_exprs: dict[str, str], app_id: str = "cdc",
-    stat_cols: list[str] | None = None, shuffle_partitions: int = 8,
-    prepare=None,
+    stat_cols: list[str] | None = None, prepare=None,
 ) -> int:
     """Streaming CDC APPLY: every micro-batch is MERGEd into a
     deltalite table (WHEN MATCHED THEN UPDATE SET ``set_exprs`` /
@@ -420,35 +428,15 @@ def run_available_now_lake_merge(
     per-batch cost tracks the batch's key footprint, not table size."""
     from pygdf_spark.sources import deltalite as dl
 
-    committed = []
-
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        if bdf.isEmpty():
-            return
+    def merge_batch(bdf: DataFrame, batch_id: int) -> int:
         if prepare is not None:
             # per-batch reduction to one row per key (the CDC delta) —
             # runs on the BATCH frame, where plain aggregates are legal
             bdf = prepare(bdf)
-        before = dl.table_version(table)
-        res = dl.merge_into(
+        return dl.merge_into(
             bdf.sparkSession, table, bdf, on=on,
             when_matched="update", set_exprs=set_exprs,
-            stat_cols=stat_cols, txn=(app_id, int(batch_id)),
-        )
-        if res["version"] > before:
-            committed.append(batch_id)
+            stat_cols=stat_cols, txn=(app_id, batch_id),
+        )["version"]
 
-    spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    try:
-        q = (
-            sdf.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return len(committed)
+    return _run_txn_batches(sdf, table, checkpoint, merge_batch)

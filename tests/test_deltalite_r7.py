@@ -506,6 +506,27 @@ def test_merge_int_key_into_long_table_still_merges(spark, table):
     assert got == [(1, "a"), (2, "B"), (3, "c")]
 
 
+@pytest.mark.parametrize("when_matched", ["replace", "update"])
+def test_merge_int_key_touching_no_file_keeps_long_declared(
+        spark, table, when_matched):
+    """An int-keyed merge whose keys touch no file writes only the
+    source rows; the commit must keep the table's declared ``long``, or
+    the next full read mixes INT32 and INT64 files under one type."""
+    dl.append(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"),
+              table, stat_cols=["k"])
+    src = spark.createDataFrame([(7, "g"), (8, "h")], "k int, v string")
+    res = dl.merge_into(
+        spark, table, src, on="k", stat_cols=["k"],
+        when_matched=when_matched,
+        set_exprs={"v": "src_v"} if when_matched == "update" else None,
+    )
+    assert res["version"] == 1 and res["files_rewritten"] == 0
+    full = dl.read_table(spark, table)
+    assert dict(full.dtypes)["k"] == "bigint"
+    assert full.count() == 4
+    assert sorted(r["k"] for r in full.collect()) == [1, 2, 7, 8]
+
+
 # --------------------- rewrite-vs-DV-delete lost-update (r7 review #5)
 #
 # Every rewrite-style commit (compact / delete rewrite / merge /

@@ -43,3 +43,58 @@ def test_run_available_now_parquet_empty_stream(spark, tmp_path):
         nothing, path=str(tmp_path / "sink"), checkpoint=str(tmp_path / "ck"),
     )
     assert out.count() == 0
+
+
+# ------------------------------------------------------------ run_stream
+
+
+def test_run_stream_timeout_stops_and_raises(spark, monkeypatch):
+    """A stream still running at the bound is stopped and raises; it
+    never returns (nor leaves behind) a half-finished query."""
+    import time
+
+    import pytest as _pytest
+
+    from pygdf_spark.streaming import pipelines as P
+
+    monkeypatch.setattr(P, "_STREAM_TIMEOUT_S", 1)
+    ev = P.read_events_stream(spark, "/root/testdata/sf0.001")
+    with _pytest.raises(TimeoutError, match="did not finish"):
+        P.run_stream(ev, lambda bdf, batch_id: time.sleep(5))
+    assert spark.streams.active == []
+
+
+def test_run_stream_failure_surfaces_from_lake_sink(spark, tmp_path,
+                                                    monkeypatch):
+    """A micro-batch that raises fails the query: the error reaches the
+    caller of the deltalite runner and no query is left active."""
+    import pytest as _pytest
+    from pyspark.errors import StreamingQueryException
+
+    from pygdf_spark.sources import deltalite as dl
+    from pygdf_spark.streaming import pipelines as P
+
+    def broken_append(*args, **kwargs):
+        raise RuntimeError("sink down")
+
+    monkeypatch.setattr(dl, "append", broken_append)
+    ev = P.read_events_stream(spark, "/root/testdata/sf0.001")
+    with _pytest.raises(StreamingQueryException, match="sink down"):
+        P.run_available_now_deltalite(
+            ev, str(tmp_path / "tbl"), str(tmp_path / "ckpt")
+        )
+    assert spark.streams.active == []
+
+
+def test_run_stream_memory_sink_matches_run_available_now(spark):
+    from pygdf_spark.streaming import pipelines as P
+
+    def counts():
+        ev = P.read_events_stream(spark, "/root/testdata/sf0.001")
+        return P.tumbling_counts(ev)
+
+    q = P.run_stream(counts(), "memory", mode="complete")
+    assert not q.isActive and q.recentProgress
+    got = sorted(spark.table(q.name).collect())
+    assert got
+    assert got == sorted(P.run_available_now(counts(), "complete").collect())
