@@ -21,6 +21,7 @@ Determinism discipline (critical for the DuckDB oracle hash-compare):
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -43,9 +44,79 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     - ``session.timeZone=UTC``: hour()/window()/timestamp casts are
       session-tz-dependent; the DuckDB oracle reads naive timestamps,
       so a non-UTC driver session would shift VALUES (the bare-session
-      sweep only proves execution, not values)."""
+      sweep only proves execution, not values).
+
+    The table is read with its schema from ``parquet_schema``, so only
+    the first read of a file pays Spark's footer-inference job: the
+    memo's key is the absolute path, the file's identity (size and
+    mtime, per file for a directory table) and the session's
+    parquet-inference confs, so a rewritten file or a session with
+    other confs infers afresh. A missing path or a URI reads exactly
+    as ``spark.read.parquet`` does."""
     pin_session_confs(spark)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+# (abspath, file identity, inference confs) → StructType that Spark
+# inferred for it. Schema METADATA only, never rows. Bounded FIFO, as
+# deltalite's _SNAPSHOT_MEMO is.
+_SCHEMA_MEMO: dict = {}
+_SCHEMA_MEMO_MAX = 128
+_SCHEMA_MEMO_LOCK = threading.Lock()
+# session confs that change the type Spark infers from a parquet footer
+_INFER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _file_identity(path: str):
+    """(size, mtime_ns) of a file; for a directory table the sorted
+    (relpath, size, mtime_ns) of every file under it."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (st.st_size, st.st_mtime_ns)
+    ident = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            ident.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(ident))
+
+
+def parquet_schema(spark: SparkSession, path: str):
+    """The schema ``spark.read.parquet(path)`` would infer, memoized on
+    the path, the file's identity and the session's inference confs
+    (see T). Returns None for a missing path or a ``scheme://`` URI:
+    those are not memoized."""
+    if "://" in path:
+        return None
+    path = os.path.abspath(path)
+    try:
+        ident = _file_identity(path)
+    except FileNotFoundError:
+        return None
+    key = (path, ident, tuple(spark.conf.get(k, None) for k in _INFER_CONFS))
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        with _SCHEMA_MEMO_LOCK:
+            if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_MAX:
+                _SCHEMA_MEMO.pop(next(iter(_SCHEMA_MEMO)))
+            _SCHEMA_MEMO[key] = schema
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the memoized schema given, so
+    no inference job runs once the file's schema is known."""
+    schema = parquet_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:

@@ -18,6 +18,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory that holds pygdf_spark/: Python workers put it on their
+# path, so codecs, UDFs and Python data sources unpickle from any cwd.
+_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _driver_memory() -> str:
+    """Half the host's physical RAM, at most 24g: a heap the host
+    cannot back gets the JVM OOM-killed before Spark reports an OOM."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 << 10, ram // 2 >> 20)}m"
+
+
 _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.adaptive.enabled": "true",
@@ -34,7 +46,7 @@ _DEFAULTS = {
     # matching cuDF's TIMESTAMP_NANOSECONDS → our documented truncation,
     # SURVEY.md §1.2 / types.hpp:216-220).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.driver.memory": "24g",
+    "spark.driver.memory": _driver_memory(),
     "spark.ui.enabled": "false",
     "spark.sql.ansi.enabled": "false",
 }
@@ -50,6 +62,9 @@ def get_spark(app_name: str = "pygdf-spark", **overrides: str) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
     conf = dict(_DEFAULTS)
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        filter(None, (_PKG_ROOT, os.environ.get("PYTHONPATH")))
+    )
     # deployment seam: ';'-separated k=v pairs override the local
     # defaults (a cluster submit would use --conf; this keeps local
     # experiments and scale-dependent settings parameterised)
@@ -66,6 +81,8 @@ def get_spark(app_name: str = "pygdf-spark", **overrides: str) -> SparkSession:
 def tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
     """Load the TPC-H-ish parquet tables from ``sf_dir`` as a dict and
     register each as a temp view (so ``spark.sql`` works too)."""
+    from pygdf_spark.queries._util import read_parquet
+
     all_names = (
         "region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings",
@@ -74,7 +91,7 @@ def tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = Non
     for name in names or all_names:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            df = spark.read.parquet(path)
+            df = read_parquet(spark, path)
             df.createOrReplaceTempView(name)
             out[name] = df
     return out

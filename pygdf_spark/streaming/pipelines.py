@@ -31,29 +31,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from pygdf_spark.queries._util import dec, shuffle_width
+from pygdf_spark.queries._util import (
+    dec,
+    normalize_ts,
+    parquet_schema,
+    pin_session_confs,
+    shuffle_width,
+)
 
 _MEM_IDS = itertools.count()
-
-# path → parquet schema (immutable source METADATA; see read_events_stream)
-_EVENTS_SCHEMA_MEMO: dict = {}
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a file-source stream with its TIMESTAMP(NANOS)
     column converted to µs TimestampType (same truncation as the batch
     reader — SURVEY.md §1.2, types.hpp:216-220)."""
-    from pygdf_spark.queries._util import pin_session_confs
-
     pin_session_confs(spark)  # window starts are session-tz-dependent
     path = os.path.join(sf_dir, "events.parquet")
-    schema = _EVENTS_SCHEMA_MEMO.get(path)
-    if schema is None:
-        # schema METADATA only (never results): the source parquet is
-        # immutable test data, and every streaming query used to pay a
-        # full batch-read analysis just to learn the same schema
-        schema = spark.read.parquet(path).schema
-        _EVENTS_SCHEMA_MEMO[path] = schema
+    # the file source needs a schema; the batch reader's memo (keyed on
+    # the file's identity) infers it once per version of the file
+    schema = parquet_schema(spark, path) or spark.read.parquet(path).schema
     if os.path.isdir(path):
         # multi-file layout (Spark-written table dir, e.g. the sf1
         # fixture): stream the table directory itself. pathGlobFilter
@@ -75,8 +72,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    from pygdf_spark.queries._util import normalize_ts
-
     return normalize_ts(sdf)
 
 

@@ -98,3 +98,31 @@ def test_run_stream_memory_sink_matches_run_available_now(spark):
     got = sorted(spark.table(q.name).collect())
     assert got
     assert got == sorted(P.run_available_now(counts(), "complete").collect())
+
+
+def test_events_stream_sees_rewritten_events_file(spark, tmp_path):
+    """events.parquet regenerated at the same path streams with its new
+    schema: the schema memo is keyed on the file's identity, not the
+    path alone (the testdata has shipped both the nanos and µs ts)."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pygdf_spark.streaming.pipelines import read_events_stream
+
+    path = str(tmp_path / "events.parquet")
+    ts = pd.to_datetime(["2024-01-01 00:00:00", "2024-01-01 00:01:00"])
+    pq.write_table(
+        pa.table({"ts": pa.array(ts, pa.timestamp("ns")), "user_id": [1, 2]}),
+        path, version="2.6",
+    )
+    first = read_events_stream(spark, str(tmp_path))
+    assert first.columns == ["ts", "user_id"]
+    pq.write_table(
+        pa.table({"ts": pa.array(ts, pa.timestamp("us")), "user_id": [1, 2],
+                  "region": ["eu", "us"]}),
+        path,
+    )
+    second = read_events_stream(spark, str(tmp_path))
+    assert second.columns == ["ts", "user_id", "region"]
+    assert dict(second.dtypes)["ts"] == "timestamp"
