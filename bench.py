@@ -8,15 +8,21 @@ Runs a representative slice of the query registry at
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"q1_pricing_summary": sec, ...}, "sf": 0.1}
 
+``sf`` is null when the directory is not named ``sf<number>`` (a
+``tools/make_sf1.py`` output, say).
+
 Each query is forced end-to-end with the ``noop`` sink (computes every
 column/row, no driver collect) so the timing reflects the distributed
-plan, not a ``count()`` shortcut that Catalyst could prune.
+plan, not a ``count()`` shortcut that Catalyst could prune. ``reset``,
+``force``, ``warm`` and ``time_query`` are that protocol; the timing
+tools under ``tools/`` call them.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -55,8 +61,58 @@ HEADLINE = [
 ]
 
 
-def _force(df) -> None:
+WARM_DIR = "/root/testdata/sf0.001"
+
+
+def reset(spark) -> None:
+    """Drop what an earlier run left behind: persisted frames and
+    memory-sink tables (min-of-N must measure the plan, not a cache hit
+    on its own intermediate). Launches no Spark job (``SHOW VIEWS`` is a
+    local command; ``catalog.listTables`` would run 1 + one per view), so
+    a job count taken around a timed attempt sees only the query's."""
+    spark.catalog.clearCache()
+    for v in spark.sql("SHOW VIEWS LIKE 'pygdf_stream_sink*'").collect():
+        if v.isTemporary:
+            spark.catalog.dropTempView(v.viewName)
+
+
+def force(df) -> None:
+    """Run ``df`` end to end through the ``noop`` sink."""
     df.write.format("noop").mode("overwrite").save()
+
+
+def warm(spark, fns) -> None:
+    """Run each ``fn(spark, sf_dir)`` once at the smallest SF, then
+    ``reset``, so the timed runs measure execution, not first-run class
+    loading: each query compiles its own wholestage-codegen classes
+    (sf0.001 is ~1% of the timed data; at steady state on a cluster
+    these classes are compiled once per executor lifetime, which is what
+    a timed run should reflect)."""
+    if os.path.isdir(WARM_DIR):
+        for fn in fns:
+            try:
+                force(fn(spark, WARM_DIR))
+            except Exception:
+                pass  # a warm-up failure must never block the timed run
+    reset(spark)
+
+
+def time_query(spark, fn, sf_dir: str, runs: int) -> list[float]:
+    """Wall seconds of ``runs`` attempts of ``force(fn(spark, sf_dir))``;
+    each attempt starts from ``reset``, outside the timed region."""
+    samples = []
+    for _ in range(runs):
+        reset(spark)
+        t0 = time.perf_counter()
+        force(fn(spark, sf_dir))
+        samples.append(time.perf_counter() - t0)
+    return samples
+
+
+def scale_factor(sf_dir: str) -> float | None:
+    """The SF of a ``sf<number>`` directory, else None."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
+    return float(m.group(1)) if m else None
 
 
 def _veneer_merge(spark, sf_dir):
@@ -168,33 +224,12 @@ def _load_gate() -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    sf = scale_factor(sf_dir)
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     gate = _load_gate()
     spark = get_spark("pygdf-spark-bench")
     queries, _ = registry()
-
-    # Warm the JVM/codegen paths on the smallest SF so per-query times
-    # measure execution, not first-run class loading: each headline
-    # query compiles its own wholestage-codegen classes, so every one
-    # gets a tiny warm-up run (sf0.001 is ~1% of the timed data; at
-    # steady state on a cluster these classes are compiled once per
-    # executor lifetime, which is what the timed pass should reflect).
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir):
-        for name in HEADLINE:
-            fn = queries.get(name)
-            if fn is not None:
-                try:
-                    _force(fn(spark, warm_dir))
-                except Exception:
-                    pass  # a warm-up failure must never block the timed run
-        # drop warm-up residue (persisted frames, memory-sink tables) so
-        # the timed pass starts from a clean executor heap
-        spark.catalog.clearCache()
-        for t in spark.catalog.listTables():
-            if t.tableType == "TEMPORARY" and t.name.startswith("pygdf_stream_sink"):
-                spark.catalog.dropTempView(t.name)
+    warm(spark, [queries[n] for n in HEADLINE if n in queries])
 
     # Per-query time = min of N consecutive runs (N=5 by default, r4
     # verdict task #5; bursty external load is documented in SCALING.md:
@@ -205,20 +240,8 @@ def main() -> None:
     # tenancy inflation carries its own evidence in the artifact.
     load_start = os.getloadavg()[0]
 
-    def _timed(fn, clear_sinks: bool) -> tuple[float, float]:
-        samples = []
-        for _ in range(n_runs):
-            # each attempt starts cold: no persisted frames or memory-
-            # sink tables from the previous attempt (min-of-N must
-            # measure the plan, not a cache hit on its own intermediate)
-            spark.catalog.clearCache()
-            if clear_sinks:
-                for t in spark.catalog.listTables():
-                    if t.tableType == "TEMPORARY" and t.name.startswith("pygdf_stream_sink"):
-                        spark.catalog.dropTempView(t.name)
-            t0 = time.perf_counter()
-            _force(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
+    def _timed(fn) -> tuple[float, float]:
+        samples = time_query(spark, fn, sf_dir, n_runs)
         return min(samples), max(samples) - min(samples)
 
     # Re-run rule (r5 verdict Next #7): a min-of-N with spread > 50% of
@@ -239,11 +262,11 @@ def main() -> None:
         fn = queries.get(name)
         if fn is None:
             continue
-        best, sp = _timed(fn, clear_sinks=True)
+        best, sp = _timed(fn)
         n_rerun = 0
         while sp > 0.5 * best and n_rerun < 2:
             _regate()
-            b2, s2 = _timed(fn, clear_sinks=True)
+            b2, s2 = _timed(fn)
             best = min(best, b2)
             sp = min(sp, s2)
             n_rerun += 1
@@ -254,7 +277,7 @@ def main() -> None:
 
     veneer: dict[str, float] = {}
     for name, fn in VENEER_BENCH.items():
-        best, _sp = _timed(fn, clear_sinks=False)
+        best, _sp = _timed(fn)
         veneer[name] = round(best, 4)
 
     extra: dict[str, float] = {}
@@ -262,7 +285,7 @@ def main() -> None:
         fn = queries.get(name)
         if fn is None:
             continue
-        best, _sp = _timed(fn, clear_sinks=True)
+        best, _sp = _timed(fn)
         extra[name] = round(best, 4)
 
     total = round(sum(times.values()), 4)

@@ -23,10 +23,13 @@ native readers, not in Python shims.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as ST
+
+from pygdf_spark.queries import _util
 
 _DTYPE_MAP = {
     "int8": ST.ByteType(), "int16": ST.ShortType(), "int32": ST.IntegerType(),
@@ -308,8 +311,10 @@ def read_parquet(
     """read_parquet (parquet.hpp:371; py io/parquet.py:164). ``filters``
     is a SQL predicate string — expressed declaratively so Catalyst
     pushes it into the scan (row-group pruning, the Spark analog of
-    io/parquet.py:213-237's pyarrow-stats pruning)."""
-    df = _s3_read(spark.read.parquet, filepath)
+    io/parquet.py:213-237's pyarrow-stats pruning). A local path reads
+    with its memoized schema (``queries._util.read_parquet``), so a
+    repeated read runs no footer-inference job."""
+    df = _s3_read(functools.partial(_util.read_parquet, spark), filepath)
     if filters is not None:
         df = df.filter(filters)
     if columns:

@@ -96,3 +96,19 @@ def test_binary_as_string_conf_is_part_of_the_key(spark, tmp_path):
         df = T(spark, str(tmp_path), "t")
         assert df.schema["b"].dataType == T_.StringType()
         assert sorted(r.b for r in df.collect()) == ["ab", "cd"]
+
+
+def test_gd_read_parquet_second_read_launches_no_job(spark, tmp_path):
+    import pygdf_spark as gd
+
+    path = str(tmp_path / "t.parquet")
+    _write(path, a=[1, 2, 3, 4], s=["w", "x", "y", "z"])
+
+    def read():
+        return gd.read_parquet(path, spark=spark, columns=["s"], filters="a > 2")
+
+    read()
+    second, n = _jobs(spark, read)
+    assert n == 0
+    assert list(second.columns) == ["s"]
+    assert sorted(second.to_pandas()["s"]) == ["y", "z"]

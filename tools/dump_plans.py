@@ -35,19 +35,18 @@ def main() -> None:
     if args.headline:
         names = list(bench.HEADLINE) + [n for n in names
                                         if n not in bench.HEADLINE]
+    queries, _ = registry()
+    unknown = sorted(set(names) - set(queries))
+    if unknown:
+        raise SystemExit(f"unknown query names: {unknown}")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", args.tag)
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark("pygdf-spark-plan-dump")
-    queries, _ = registry()
     for name in names:
-        fn = queries.get(name)
-        if fn is None:
-            print(f"SKIP {name}: not in registry")
-            continue
         try:
-            df = fn(spark, args.sf_dir)
+            df = queries[name](spark, args.sf_dir)
             try:
                 plan = spark._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted")

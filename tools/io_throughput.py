@@ -5,8 +5,9 @@ BASELINE.md rows 5-7). Measures three read shapes the reference grids
 over — all columns, alternate columns, single column — plus a full
 write, and prints bytes/s per shape.
 
-Usage: python tools/io_throughput.py [src_parquet_dir]
-       (default /tmp/scale_smoke_x32/lineitem.parquet)
+Usage: python tools/io_throughput.py [src_parquet]
+       (default /tmp/pygdf_sf1/lineitem.parquet, written by
+       `tools/make_sf1.py`; `make_sf1.py <dir> <N>` makes larger ones)
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
 from pygdf_spark import get_spark
 
 
@@ -35,12 +37,12 @@ def _timed_scan(spark, path: str, cols=None) -> float:
     df = spark.read.parquet(path)
     if cols:
         df = df.select(*cols)
-    df.write.format("noop").mode("overwrite").save()
+    bench.force(df)
     return time.perf_counter() - t0
 
 
 def main() -> None:
-    src = sys.argv[1] if len(sys.argv) > 1 else "/tmp/scale_smoke_x32/lineitem.parquet"
+    src = sys.argv[1] if len(sys.argv) > 1 else "/tmp/pygdf_sf1/lineitem.parquet"
     spark = get_spark("io-throughput")
     size = _dir_bytes(src)
     all_cols = spark.read.parquet(src).columns

@@ -4,33 +4,41 @@ The container ships sf{0.001,0.01,0.1} only (TESTDATA.md), but scale-
 dependent bug classes (decimal ties, partition-count effects, window
 boundary permutations) keep appearing one tier above wherever they were
 last fixed — so the endurance gate needs an sf1.0. This builds one by
-UNION-ing 10 key-shifted replicas of every sf0.1 table: each surrogate
-key family gets `replica * (max_key + 1)` added, so uniqueness and
+UNION-ing N key-shifted replicas (default 10) of every sf0.1 table: each
+surrogate key family gets `replica * (max_key + 1)` added, so uniqueness and
 referential integrity (orders→customer, lineitem→orders/part/supplier,
 events→user, embeddings/documents ids) survive and every query's
 join/group semantics scale rather than degenerate. nation/region are
 fixed-size dimensions in TPC-H and are copied as-is. Timestamps and
 payloads are left identical across replicas — count-type aggregates
-scale 10x, distinct-text semantics stay self-consistent because the
+scale Nx, distinct-text semantics stay self-consistent because the
 DuckDB oracle reads the SAME generated files.
 
 The build is a distributed Spark plan (scan -> withColumn -> union ->
 write), not a pandas loop: at a real 10x of a big base this is the
 shape that would still run.
 
-Usage: python tools/make_sf1.py [out_dir]   (default /tmp/pygdf_sf1)
+Usage: python tools/make_sf1.py [out_dir [replicas]]
+       (default /tmp/pygdf_sf1 10)
+
+Other replica counts give the scale curve's data points; time them with
+`tools/time_queries.py --sf-dir <out_dir>`.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pygdf_spark import get_spark
+
 SRC = "/root/testdata/sf0.1"
-REPLICAS = 10
 
 #: key column -> the key family it belongs to (shift = replica * span)
 _TABLE_KEYS = {
@@ -63,28 +71,21 @@ _FAMILY_SOURCE = {
 }
 
 
-def main(out_dir: str = "/tmp/pygdf_sf1") -> None:
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .appName("make_sf1")
-        .getOrCreate()
-    )
+def build(spark, src: str, out_dir: str, replicas: int) -> None:
+    """Write ``replicas`` key-shifted copies of every table in ``src``
+    (one copy of nation/region) to ``out_dir/<table>.parquet``."""
     spans = {}
     for fam, (tbl, col) in _FAMILY_SOURCE.items():
-        m = spark.read.parquet(f"{SRC}/{tbl}.parquet").agg(F.max(col)).collect()[0][0]
+        m = spark.read.parquet(f"{src}/{tbl}.parquet").agg(F.max(col)).collect()[0][0]
         spans[fam] = int(m) + 1
     os.makedirs(out_dir, exist_ok=True)
     for tbl, keys in _TABLE_KEYS.items():
-        base = spark.read.parquet(f"{SRC}/{tbl}.parquet")
+        base = spark.read.parquet(f"{src}/{tbl}.parquet")
         if not keys:
             out = base
         else:
             parts = []
-            for i in range(REPLICAS):
+            for i in range(replicas):
                 df = base
                 for col, fam in keys.items():
                     df = df.withColumn(
@@ -98,9 +99,6 @@ def main(out_dir: str = "/tmp/pygdf_sf1") -> None:
         out.write.mode("overwrite").parquet(dst + ".dir")
         # single-file layout to match the driver's (read side accepts
         # both, but keep the dir names identical: <table>.parquet)
-        import glob
-        import shutil
-
         files = glob.glob(f"{dst}.dir/*.parquet")
         if len(files) == 1:
             shutil.move(files[0], dst)
@@ -110,7 +108,15 @@ def main(out_dir: str = "/tmp/pygdf_sf1") -> None:
             os.rename(f"{dst}.dir", dst)
         n = spark.read.parquet(dst).count()
         print(f"{tbl}: {n:,} rows")
-    print(f"sf1.0 dataset at {out_dir}")
+
+
+def main(out_dir: str = "/tmp/pygdf_sf1", replicas: str = "10") -> None:
+    spark = get_spark(
+        "make_sf1", **{"spark.sql.parquet.int96RebaseModeInWrite": "CORRECTED"}
+    )
+    build(spark, SRC, out_dir, int(replicas))
+    print(f"{replicas}x sf0.1 dataset at {out_dir}")
+    spark.stop()
 
 
 if __name__ == "__main__":

@@ -1,11 +1,11 @@
 """Per-job profile of one registry query (optimization-loop tool).
 
-Runs the query once (noop force) in a UI-enabled session and dumps the
-Spark REST API's job list: job id, duration, #tasks, description/call
-site. Job latency — not per-task compute — dominates the lifecycle-
-style queries (lakehouse commits, iterative graph ops) at bench SF, so
-the first question for any slow query is "how many jobs, how long
-each" (guide §1.1/§7.1).
+Runs the query once (``bench.time_query``) in a UI-enabled session
+and dumps the Spark REST API's job list: job id, duration, #tasks,
+description/call site. Job latency — not per-task compute — dominates
+the lifecycle-style queries (lakehouse commits, iterative graph ops)
+at bench SF, so the first question for any slow query is "how many
+jobs, how long each" (guide §1.1/§7.1).
 
 Usage: python tools/profile_query.py name [name2 ...] [--sf-dir DIR]
 """
@@ -21,6 +21,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
 from pygdf_spark import get_spark
 from pygdf_spark.queries import registry
 
@@ -42,32 +43,22 @@ def main() -> None:
                          "(warm codegen)")
     args = ap.parse_args()
 
+    queries, _ = registry()
+    unknown = sorted(set(args.names) - set(queries))
+    if unknown:
+        raise SystemExit(f"unknown query names: {unknown}")
     spark = get_spark("pygdf-spark-profile", **{"spark.ui.enabled": "true"})
     sc = spark.sparkContext
     port = int(sc.uiWebUrl.rsplit(":", 1)[1])
     app_id = sc.applicationId
-    queries, _ = registry()
 
     for name in args.names:
-        fn = queries.get(name)
-        if fn is None:
-            print(f"SKIP {name} (not in registry)")
-            continue
-        for i in range(args.runs):
-            spark.catalog.clearCache()
-            for t in spark.catalog.listTables():
-                if t.tableType == "TEMPORARY" and t.name.startswith(
-                    "pygdf_stream_sink"
-                ):
-                    spark.catalog.dropTempView(t.name)
-            jobs_before = {
-                j["jobId"] for j in _api(port, f"applications/{app_id}/jobs")
-            }
-            t0 = time.perf_counter()
-            fn(spark, args.sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            wall = time.perf_counter() - t0
+        fn = queries[name]
+        bench.time_query(spark, fn, args.sf_dir, args.runs - 1)
+        jobs_before = {
+            j["jobId"] for j in _api(port, f"applications/{app_id}/jobs")
+        }
+        [wall] = bench.time_query(spark, fn, args.sf_dir, 1)
         jobs = [
             j for j in _api(port, f"applications/{app_id}/jobs")
             if j["jobId"] not in jobs_before

@@ -1,8 +1,12 @@
-"""Time individual registry queries with the bench's exact protocol
-(noop sink, min-of-N, per-attempt cache clear) without running the whole
-bench — the optimization-loop inner harness.
+"""Time individual registry queries with the bench's protocol
+(``bench.warm`` then ``bench.time_query``: noop sink, per-attempt reset)
+without running the whole bench — the optimization-loop inner harness,
+and with a ``tools/make_sf1.py`` output dir, the scale curve:
 
-Usage: python tools/time_queries.py [-n 5] name1 name2 ...
+    python tools/make_sf1.py /tmp/pygdf_x8 8
+    python tools/time_queries.py -n 1 --sf-dir /tmp/pygdf_x8 name1 ...
+
+Usage: python tools/time_queries.py [-n 5] [--sf-dir DIR] name1 name2 ...
 """
 
 from __future__ import annotations
@@ -11,10 +15,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
 from pygdf_spark import get_spark
 from pygdf_spark.queries import registry
 
@@ -27,42 +31,21 @@ def main() -> None:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    spark = get_spark("pygdf-spark-timeq")
     queries, _ = registry()
-
-    def force(df):
-        df.write.format("noop").mode("overwrite").save()
-
+    unknown = sorted(set(args.names) - set(queries))
+    if unknown:
+        raise SystemExit(f"unknown query names: {unknown}")
+    spark = get_spark("pygdf-spark-timeq")
     out = {}
     for name in args.names:
-        fn = queries.get(name)
-        if fn is None:
-            print(f"SKIP {name}")
-            continue
-        # one warm-up at sf0.001 (codegen/class-load), matching bench.py
-        warm = "/root/testdata/sf0.001"
-        if os.path.isdir(warm):
-            try:
-                force(fn(spark, warm))
-            except Exception:
-                pass
-        spark.catalog.clearCache()
-        for t in spark.catalog.listTables():
-            if t.tableType == "TEMPORARY" and t.name.startswith("pygdf_stream_sink"):
-                spark.catalog.dropTempView(t.name)
-        samples = []
-        for _ in range(args.n):
-            spark.catalog.clearCache()
-            for t in spark.catalog.listTables():
-                if t.tableType == "TEMPORARY" and t.name.startswith(
-                        "pygdf_stream_sink"):
-                    spark.catalog.dropTempView(t.name)
-            t0 = time.perf_counter()
-            force(fn(spark, args.sf_dir))
-            samples.append(time.perf_counter() - t0)
+        bench.warm(spark, [queries[name]])
+        samples = bench.time_query(spark, queries[name], args.sf_dir, args.n)
+        # host load rides along: a time measured at load ≫ ncpu is
+        # neighbor noise, not a plan regression (SCALING.md)
         out[name] = {"min": round(min(samples), 4),
                      "spread": round(max(samples) - min(samples), 4),
-                     "samples": [round(s, 3) for s in samples]}
+                     "samples": [round(s, 3) for s in samples],
+                     "load1": round(os.getloadavg()[0], 1)}
         print(name, out[name])
     print(json.dumps(out, separators=(",", ":")))
     spark.stop()
