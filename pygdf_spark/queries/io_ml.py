@@ -4,10 +4,10 @@ Training-data pipelines at 100 TB meet tensors in two public formats
 besides parquet: sharded ``.npy`` (embedding dumps) and safetensors
 (checkpoint/embedding containers). Both are implemented as pure-Python
 spec codecs (``sources/npy_lite.py`` / ``sources/safetensors_lite.py``
-— the avro_lite jar-free pattern): write fans out per partition via
-``mapInPandas``; read distributes whole shards through Spark's
-``binaryFile`` source (one task per shard, the format's parallelism
-unit).
+— the avro_lite jar-free pattern) over ``sources/shards.py``: write fans
+out one shard per partition via ``mapInPandas``; read distributes whole
+shards through Spark's ``binaryFile`` source (the shard is the format's
+parallelism unit).
 
 Oracle discipline: every stat over float payloads is the ORDER-
 INDEPENDENT integer fold ``SUM(FLOOR(e*1000))`` — float32 bits survive

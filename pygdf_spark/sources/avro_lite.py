@@ -4,10 +4,11 @@ The reference reads Avro natively (cpp/include/cudf/io/avro.hpp:212,
 cpp/src/io/avro). Spark's own Avro support lives in the external
 spark-avro jar, which this container does not ship — but the Avro OCF
 format (the public Apache Avro 1.x spec) is small enough to decode in
-Python, and the JVM stays the execution engine: ``read_avro`` lists the
-files driver-side, reads ONE header for the schema, and fans the file
-list out with ``mapInPandas`` so each task decodes its own files into
-Arrow batches. That is the standard binary-ingest shape — one task per
+Python, and the JVM stays the execution engine: ``read_avro`` reads ONE
+header driver-side for the schema, and the files arrive whole through
+the container codecs' shard source (``sources/shards.py``: Spark's
+``binaryFile`` + ``mapInPandas``), so each task decodes its own files
+into Arrow batches. That is the standard binary-ingest shape — one task per
 file/split, no driver materialization — so a directory of N avro files
 decodes with N-way parallelism at any scale.
 
@@ -171,15 +172,10 @@ def _decode_stream(fh) -> tuple[dict, list[dict]]:
     return schema, records
 
 
-def read_records(path: str) -> tuple[dict, list[dict]]:
-    """Decode one file → (schema, records). Used per-task."""
-    with open(path, "rb") as fh:
-        return _decode_stream(fh)
-
-
 def read_records_buf(data: bytes) -> tuple[dict, list[dict]]:
-    """Decode an in-memory OCF blob (Kafka message payload shape —
-    custreamz read_gdf hands cudf.read_avro the raw buffer the same
+    """Decode an in-memory OCF blob → (schema, records): one file's
+    bytes in ``read_avro_lite``, one message payload in the Kafka path
+    (custreamz read_gdf hands cudf.read_avro the raw buffer the same
     way; kafka.py:158-165)."""
     return _decode_stream(io.BytesIO(data))
 
@@ -354,43 +350,37 @@ def schema_to_ddl(schema: dict) -> str:
 
 def read_avro_lite(spark, filepath: str):
     """Distributed Avro read without the spark-avro jar: one header read
-    driver-side for the schema, then one decode task per file via
-    mapInPandas (Arrow-batched; the plan below the exchange is a plain
-    parallelized file list)."""
+    driver-side for the schema, then one decode per file through
+    ``sources/shards.py`` (``binaryFile`` + Arrow-batched
+    ``mapInPandas``)."""
     import pandas as pd
 
-    paths = sorted(glob(filepath)) if any(ch in filepath for ch in "*?[") else None
-    if paths is None:
-        paths = (
-            sorted(
-                os.path.join(filepath, f)
-                for f in os.listdir(filepath)
-                if f.endswith(".avro")
-            )
-            if os.path.isdir(filepath)
-            else [filepath]
-        )
+    from pygdf_spark.sources.shards import read_shards
+
+    is_dir = os.path.isdir(filepath)
+    if any(ch in filepath for ch in "*?["):
+        paths = sorted(glob(filepath))
+    elif is_dir:
+        paths = sorted(glob(os.path.join(filepath, "*.avro")))
+    else:
+        paths = [filepath]
     if not paths:
         raise FileNotFoundError(f"no avro files at {filepath}")
     with open(paths[0], "rb") as fh:
         schema, _, _ = _read_header(fh)
-    ddl = schema_to_ddl(schema)
     names = [f["name"] for f in schema["fields"]]
 
-    def decode(batches):
-        for pdf in batches:
-            for p in pdf["path"]:
-                fschema, records = read_records(p)
-                fnames = [f["name"] for f in fschema["fields"]]
-                if fnames != names:
-                    # the driver took the schema from the FIRST file; a
-                    # divergent sibling must fail loudly, not yield
-                    # silently-null columns
-                    raise ValueError(
-                        f"avro schema mismatch in {p}: fields {fnames} "
-                        f"!= {names} (from the first file)"
-                    )
-                yield pd.DataFrame.from_records(records, columns=names)
+    def decode(p, content):
+        fschema, records = read_records_buf(content)
+        fnames = [f["name"] for f in fschema["fields"]]
+        if fnames != names:
+            # the driver took the schema from the FIRST file; a divergent
+            # sibling must fail loudly, not yield silently-null columns
+            raise ValueError(
+                f"avro schema mismatch in {p}: fields {fnames} "
+                f"!= {names} (from the first file)"
+            )
+        return pd.DataFrame.from_records(records, columns=names)
 
-    plist = spark.createDataFrame([(p,) for p in paths], "path string")
-    return plist.repartition(len(paths)).mapInPandas(decode, schema=ddl)
+    return read_shards(spark, filepath, decode, schema_to_ddl(schema),
+                       glob="*.avro" if is_dir else None)

@@ -5,12 +5,11 @@ version, ASCII header dict ``{descr, fortran_order, shape}``, raw
 little-endian array body) is the lingua franca for embedding/tensor
 interchange in ML data pipelines. A single ``.npy`` is not splittable,
 so the distributed layout is the standard SHARD DIRECTORY: one
-``part-<i>.npy`` per partition (the same layout Spark uses for every
-columnar sink). Write fans out via ``mapInPandas`` (each executor
-serializes its own partition locally — no driver collect); read lists
-the shards into Spark's ``binaryFile`` source and decodes per shard in
-``mapInPandas`` — shards are the parallelism unit, like parquet
-row-groups.
+``ids-<i>.npy`` + ``vecs-<i>.npy`` pair per partition (the same layout
+Spark uses for every columnar sink). Write and read go through ``sources/shards.py``: each
+executor serializes its own partition locally (no driver collect), and
+the read decodes whole shards in ``mapInPandas`` — shards are the
+parallelism unit, like parquet row-groups.
 
 Header parsing uses ``ast.literal_eval`` (the spec's own recommendation)
 — never ``eval`` — and only the simple-dtype subset (numeric/bool), 1-D
@@ -70,93 +69,52 @@ def decode_npy(data: bytes) -> np.ndarray:
     return arr
 
 
+def _arrays(pdf, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
+    """One partition's (id, vector) rows → (int64 ids, float32 2-D vecs)."""
+    return (np.asarray(pdf[id_col], np.int64),
+            np.stack([np.asarray(v, np.float32) for v in pdf[vec_col]]))
+
+
+def _rows(ids: np.ndarray, vecs: np.ndarray, where: str):
+    """Decoded ids/vecs halves of one shard → (vec_id, embedding) rows."""
+    import pandas as pd
+
+    if len(ids) != len(vecs):
+        raise ValueError(f"{where}: ids/vecs length mismatch")
+    return pd.DataFrame({
+        "vec_id": ids.astype("int64"),
+        "embedding": [row.tolist() for row in vecs],
+    })
+
+
 def write_npy_dir(df, path: str, id_col: str, vec_col: str) -> None:
     """Write (id, vector) rows as a shard directory: per partition, one
     ``ids-<pid>.npy`` (int64) + ``vecs-<pid>.npy`` (float32 2-D) pair.
-    Executor-local serialization via mapInPandas; the tiny per-shard
-    result frame (shard path + row count) is the only thing that moves.
+    Retry safety, the empty-target rule and filesystem scope are those
+    of ``sources/shards.py``."""
+    from pygdf_spark.sources.shards import write_shards
 
-    Task-retry safety: shards are named by ``TaskContext.partitionId()``
-    (a retry/speculative attempt OVERWRITES its own shard instead of
-    adding a duplicate) and each file is written to a ``.tmp-<uuid>``
-    sibling then ``os.replace``d into place, so a killed attempt can
-    never leave a torn shard that ``read_npy_dir`` would decode.
-
-    Filesystem scope: the WRITE path opens executor-local POSIX paths —
-    it requires ``path`` to be a filesystem shared by all executors
-    (local[*] / NFS); for object stores, write parquet and convert, or
-    run the writer per-node. The READ path (``read_npy_dir``) goes
-    through Spark's ``binaryFile`` source and is FS-agnostic."""
-    import os
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    os.makedirs(path, exist_ok=True)
-
-    def dump(batches):
-        import uuid
-
-        from pyspark import TaskContext
-
-        ids, vecs = [], []
-        for pdf in batches:
-            ids.extend(int(v) for v in pdf[id_col])
-            vecs.extend(list(v) for v in pdf[vec_col])
-        if ids:
-            pid = f"{TaskContext.get().partitionId():06d}"
-            for prefix, payload in (
-                ("ids", np.asarray(ids, dtype=np.int64)),
-                ("vecs", np.asarray(vecs, dtype=np.float32)),
-            ):
-                final = os.path.join(path, f"{prefix}-{pid}.npy")
-                tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-                with open(tmp, "wb") as f:
-                    f.write(encode_npy(payload))
-                os.replace(tmp, final)
-            yield pd.DataFrame({"shard": [pid], "rows": [len(ids)]})
-
-    df.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        dump, "shard string, rows long"
-    ).write.format("noop").mode("overwrite").save()
+    write_shards(
+        df.select(id_col, vec_col), path,
+        lambda pdf: [encode_npy(a) for a in _arrays(pdf, id_col, vec_col)],
+        "ids-%06d.npy", "vecs-%06d.npy",
+    )
 
 
 def read_npy_dir(spark, path: str):
-    """Read an id/vector shard directory back to (id, vector) rows.
+    """Read an id/vector shard directory back to (id, vector) rows: the
+    ids/vecs halves of each shard arrive together through
+    ``sources/shards.py`` (FS-agnostic), then decode. A half without its
+    partner raises."""
+    from pygdf_spark.sources.shards import read_shards
 
-    Spark's ``binaryFile`` source distributes whole shards to
-    executors (one task per file — the format's parallelism unit);
-    the ids/vecs halves of each shard pair are re-united by an equi-
-    join on the shard id (FS-agnostic: works on HDFS/S3 paths exactly
-    like local ones), then decoded in mapInPandas."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    def load(shard, *halves):
+        if len(halves) != 2:
+            raise ValueError(f"npy shard {shard}: ids/vecs half missing")
+        return _rows(*map(decode_npy, halves), f"npy shard {shard}")
 
-    def half(prefix: str, alias: str):
-        return (
-            spark.read.format("binaryFile")
-            .load(f"{path}/{prefix}-*.npy")
-            .select(
-                F.regexp_extract("path", rf"{prefix}-([0-9a-f]+)\.npy$", 1).alias("shard"),
-                F.col("content").alias(alias),
-            )
-        )
-
-    paired = half("ids", "ids_bytes").join(half("vecs", "vecs_bytes"), "shard")
-
-    def load(batches):
-        for pdf in batches:
-            for shard, ib, vb in zip(pdf["shard"], pdf["ids_bytes"], pdf["vecs_bytes"]):
-                ids = decode_npy(bytes(ib))
-                vecs = decode_npy(bytes(vb))
-                if len(ids) != len(vecs):
-                    raise ValueError(f"shard mismatch {shard}")
-                yield pd.DataFrame({
-                    "vec_id": ids.astype("int64"),
-                    "embedding": [row.tolist() for row in vecs],
-                })
-
-    return paired.mapInPandas(load, "vec_id long, embedding array<float>")
+    return read_shards(spark, path, load, "vec_id long, embedding array<float>",
+                       glob="{ids,vecs}-*.npy", pair=r"-(\w+)\.npy$")
 
 
 # ----------------------------------------------------------------- npz
@@ -165,71 +123,43 @@ def read_npy_dir(spark, path: str):
 def write_npz_dir(df, path: str, id_col: str, vec_col: str) -> None:
     """Sharded ``.npz`` sink: one zip container per partition holding
     the standard numpy archive members (``ids.npy`` + ``vecs.npy``).
-    Same commit discipline as write_npy_dir: TaskContext-named shards
-    (retries overwrite, never duplicate) written temp-then-rename.
-    ZIP_STORED — the float payload is incompressible and STORED keeps
-    the member byte ranges seekable for partial readers."""
+    Shard naming, retry safety and the empty-target rule are those of
+    ``sources/shards.py``. ZIP_STORED — the float payload is
+    incompressible and STORED keeps the member byte ranges seekable for
+    partial readers."""
     import io
-    import os
-    import uuid
     import zipfile
 
-    import pandas as pd
-    from pyspark import TaskContext
+    from pygdf_spark.sources.shards import write_shards
 
-    os.makedirs(path, exist_ok=True)
+    def pack(pdf):
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as z:
+            for member, a in zip(("ids.npy", "vecs.npy"),
+                                 _arrays(pdf, id_col, vec_col)):
+                z.writestr(member, encode_npy(a))
+        return [buf.getvalue()]
 
-    def dump(batches):
-        pid = TaskContext.get().partitionId()
-        ids, vecs = [], []
-        for pdf in batches:
-            if len(pdf):
-                ids.append(np.asarray(pdf[id_col], np.int64))
-                vecs.append(
-                    np.stack([np.asarray(v, np.float32) for v in pdf[vec_col]])
-                )
-        if ids:
-            buf = io.BytesIO()
-            with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as z:
-                z.writestr("ids.npy", encode_npy(np.concatenate(ids)))
-                z.writestr("vecs.npy", encode_npy(np.vstack(vecs)))
-            tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex[:8]}")
-            with open(tmp, "wb") as f:
-                f.write(buf.getvalue())
-            os.replace(tmp, os.path.join(path, f"part-{pid:05d}.npz"))
-        yield pd.DataFrame({"n": [len(ids)]})
-
-    df.mapInPandas(dump, "n long").collect()  # bounded: 1 row/partition
+    write_shards(df.select(id_col, vec_col), path, pack, "part-%05d.npz")
 
 
 def read_npz_dir(spark, path: str):
     """Read ``.npz`` shards back to (vec_id, embedding) rows — whole
-    zip containers distribute through binaryFile (one task per shard),
-    members decode with the same npy codec. Malformed zips or
+    zip containers arrive through ``sources/shards.py`` (one task per
+    shard), members decode with the same npy codec. Malformed zips or
     mismatched member lengths raise (fail-loud)."""
     import io
     import zipfile
 
-    import pandas as pd
+    from pygdf_spark.sources.shards import read_shards
 
-    files = spark.read.format("binaryFile").load(f"{path}/part-*.npz")
+    def load(_path, content):
+        try:
+            z = zipfile.ZipFile(io.BytesIO(content))
+            ids, vecs = decode_npy(z.read("ids.npy")), decode_npy(z.read("vecs.npy"))
+        except (zipfile.BadZipFile, KeyError) as e:
+            raise ValueError(f"npz: malformed shard: {e}") from e
+        return _rows(ids, vecs, "npz")
 
-    def load(batches):
-        for pdf in batches:
-            for content in pdf["content"]:
-                try:
-                    z = zipfile.ZipFile(io.BytesIO(bytes(content)))
-                    ids = decode_npy(z.read("ids.npy"))
-                    vecs = decode_npy(z.read("vecs.npy"))
-                except (zipfile.BadZipFile, KeyError) as e:
-                    raise ValueError(f"npz: malformed shard: {e}") from e
-                if len(ids) != len(vecs):
-                    raise ValueError("npz: ids/vecs length mismatch")
-                yield pd.DataFrame({
-                    "vec_id": ids.astype("int64"),
-                    "embedding": [row.tolist() for row in vecs],
-                })
-
-    return files.select("content").mapInPandas(
-        load, "vec_id long, embedding array<float>"
-    )
+    return read_shards(spark, path, load, "vec_id long, embedding array<float>",
+                       glob="part-*.npz")

@@ -7,15 +7,14 @@ per-record gzip MEMBERS concatenated into one ``.warc.gz`` (so a reader
 can seek to a member and inflate just that record; a whole-file reader
 inflates members in a loop off ``zlib.decompressobj().unused_data``).
 
-Execution contract (same as the other jar-free codecs): shards arrive
-whole through Spark's ``binaryFile`` source — one task per shard, the
-format's parallelism unit, exactly how Common Crawl is processed in
+Execution contract (the container codecs' ``sources/shards.py``):
+shards arrive whole through Spark's ``binaryFile`` source — the shard is
+the format's parallelism unit, exactly how Common Crawl is processed in
 practice (90k shards/crawl, embarrassingly parallel) — and records are
-parsed inside ``mapInPandas``. No driver involvement, no shuffle.
+parsed inside ``mapInPandas``. No driver involvement.
 
 The writer emits per-record-gzipped response records for fixtures and
-export parity; write fans out one shard per partition (npy_lite's
-TaskContext + temp/rename discipline).
+export parity; write fans out one shard per partition.
 """
 
 from __future__ import annotations
@@ -141,99 +140,56 @@ def decode_warc(data: bytes) -> list[dict]:
 def write_warc_dir(df, path: str, uri_col: str, date_col: str,
                    id_col: str, payload_col: str) -> None:
     """Write rows as a shard directory of ``part-<pid>.warc.gz`` files —
-    one shard per partition via mapInPandas (executor-local
-    serialization, TaskContext shard naming, temp+rename atomicity;
-    write path needs a shared POSIX FS like the other shard writers —
-    the READ path is FS-agnostic via binaryFile)."""
-    import os
+    one shard per partition through ``sources/shards.py`` (executor-local
+    serialization; retry safety, the empty-target rule and filesystem
+    scope are documented there)."""
+    from pygdf_spark.sources.shards import write_shards
 
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    os.makedirs(path, exist_ok=True)
-
-    def dump(batches):
-        import uuid
-
-        from pyspark import TaskContext
-
+    def encode(pdf):
         recs = []
-        for pdf in batches:
-            for uri, date, rid, payload in zip(
-                pdf[uri_col], pdf[date_col], pdf[id_col], pdf[payload_col]
-            ):
-                if payload is None or uri is None or rid is None:
-                    # loud, not b"None": a null would otherwise be
-                    # silently serialized as the 4-byte string "None"
-                    # (the write_safetensors null-cell lesson)
-                    raise ValueError(
-                        f"null value in WARC write (record_id={rid!r}, "
-                        f"uri={uri!r})")
-                body = payload if isinstance(payload, (bytes, bytearray)) \
-                    else str(payload).encode("utf-8")
-                recs.append({
-                    "warc_type": "response", "target_uri": str(uri),
-                    "date": str(date), "record_id": str(rid),
-                    "payload": bytes(body),
-                })
-        if recs:
-            pid = f"{TaskContext.get().partitionId():06d}"
-            final = os.path.join(path, f"part-{pid}.warc.gz")
-            tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "wb") as f:
-                f.write(encode_warc(recs))
-            os.replace(tmp, final)
-            yield pd.DataFrame({"shard": [pid], "rows": [len(recs)]})
+        for uri, date, rid, payload in zip(
+            pdf[uri_col], pdf[date_col], pdf[id_col], pdf[payload_col]
+        ):
+            if payload is None or uri is None or rid is None:
+                # loud, not b"None": a null would otherwise be silently
+                # serialized as the 4-byte string "None" (the
+                # write_safetensors null-cell lesson)
+                raise ValueError(
+                    f"null value in WARC write (record_id={rid!r}, "
+                    f"uri={uri!r})")
+            body = payload if isinstance(payload, (bytes, bytearray)) \
+                else str(payload).encode("utf-8")
+            recs.append({
+                "warc_type": "response", "target_uri": str(uri),
+                "date": str(date), "record_id": str(rid),
+                "payload": bytes(body),
+            })
+        return [encode_warc(recs)]
 
-    df.select(
-        F.col(uri_col), F.col(date_col), F.col(id_col), F.col(payload_col)
-    ).mapInPandas(dump, "shard string, rows long") \
-        .write.format("noop").mode("overwrite").save()
+    write_shards(df.select(uri_col, date_col, id_col, payload_col), path,
+                 encode, "part-%06d.warc.gz")
 
 
 def read_warc(spark, path_glob: str):
-    """Distributed WARC read: one binaryFile task per shard → one row
-    per record (shard, warc_type, target_uri, date, record_id,
-    content_type, payload binary, payload_len)."""
+    """Distributed WARC read through ``sources/shards.py``: one decode
+    per shard → one row per record (shard, warc_type, target_uri, date,
+    record_id, content_type, payload binary, payload_len)."""
     import os
 
     import pandas as pd
 
-    files = spark.read.format("binaryFile").load(path_glob)
-    # binaryFile PACKS small files up to maxPartitionBytes per split —
-    # 32 × 8 MB shards would decode in ~2 tasks (measured: the 32×
-    # curve sat at 191 s with 3 cores busy). Re-spread one row per
-    # shard across the cluster; at production shard sizes (≥128 MB)
-    # the scan already yields one file per split and this exchange
-    # moves ~1 row per partition.
-    n_files = files.select("path").count()  # listing-only, cheap
-    if n_files > 1:
-        par = files.sparkSession.sparkContext.defaultParallelism
-        files = files.repartition(min(n_files, 2 * par), "path")
+    from pygdf_spark.sources.shards import read_shards
 
-    def scan(batches):
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for r in decode_warc(bytes(content)):
-                    rows.append({
-                        "shard": os.path.basename(p),
-                        "warc_type": r["warc_type"],
-                        "target_uri": r["target_uri"],
-                        "date": r["date"],
-                        "record_id": r["record_id"],
-                        "content_type": r["content_type"],
-                        "payload": r["payload"],
-                        "payload_len": len(r["payload"]),
-                    })
-            yield pd.DataFrame(
-                rows, columns=["shard", "warc_type", "target_uri", "date",
-                               "record_id", "content_type", "payload",
-                               "payload_len"],
-            ).astype({"payload_len": "int64"})
+    cols = ["warc_type", "target_uri", "date", "record_id", "content_type",
+            "payload"]
 
-    return files.select("path", "content").mapInPandas(
-        scan, "shard string, warc_type string, target_uri string, "
-              "date string, record_id string, content_type string, "
-              "payload binary, payload_len long"
-    )
+    def scan(p, content):
+        out = pd.DataFrame(decode_warc(content), columns=cols)
+        out.insert(0, "shard", os.path.basename(p))
+        out["payload_len"] = out["payload"].map(len).astype("int64")
+        return out
+
+    return read_shards(
+        spark, path_glob, scan, "shard string, warc_type string, "
+        "target_uri string, date string, record_id string, "
+        "content_type string, payload binary, payload_len long")

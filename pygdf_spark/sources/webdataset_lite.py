@@ -7,14 +7,13 @@ form ONE sample with three fields keyed by extension. It is the
 de-facto interchange layout for image/audio+caption corpora because a
 tar shard streams sequentially and shards are the parallelism unit.
 
-Spark mapping (same contract as the other jar-free codecs):
+Spark mapping (the container codecs' ``sources/shards.py``):
 
-- read: shards arrive whole via ``binaryFile`` (one task per shard),
-  members are parsed with stdlib ``tarfile`` inside ``mapInPandas``;
-  one output row per (sample key, extension) — pivot by extension to
-  get one row per sample (demonstrated in queries/multimodal.py).
-- write: one ``shard-<pid>.tar`` per partition via mapInPandas
-  (TaskContext naming + temp/rename, the npy_lite discipline).
+- read: shards arrive whole via ``binaryFile``, members are parsed
+  with stdlib ``tarfile`` inside ``mapInPandas``; one output row per
+  (sample key, extension) — pivot by extension to get one row per
+  sample (demonstrated in queries/multimodal.py).
+- write: one ``shard-<pid>.tar`` per partition.
 
 Deterministic tars: member mtime/uid/gid are zeroed so byte-identical
 inputs produce byte-identical shards (re-runs and retries are
@@ -69,87 +68,56 @@ def decode_webdataset(data: bytes) -> list[tuple[str, str, bytes]]:
 
 def write_webdataset(df, path: str, key_col: str,
                      field_cols: dict[str, str]) -> None:
-    """Write one tar shard per partition. ``field_cols`` maps
+    """Write one ``shard-<pid>.tar`` per partition through
+    ``sources/shards.py`` (retry safety, the empty-target rule and
+    filesystem scope are documented there). ``field_cols`` maps
     column → member extension (e.g. {"text": "txt", "img": "png"});
-    binary columns are written raw, everything else UTF-8 encoded.
-    Shared-POSIX-FS write / FS-agnostic binaryFile read, like the other
-    shard writers."""
-    import os
+    binary columns are written raw, everything else UTF-8 encoded."""
+    from pygdf_spark.sources.shards import write_shards
 
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    os.makedirs(path, exist_ok=True)
-    cols = [key_col, *field_cols]
-
-    def dump(batches):
-        import uuid
-
-        from pyspark import TaskContext
-
+    def encode(pdf):
         samples = []
-        for pdf in batches:
-            # positional zip, not itertuples+getattr: pandas mangles
-            # non-identifier column names ("my col" → _1) under
-            # itertuples, which would getattr the wrong field
-            series = [pdf[key_col]] + [pdf[c] for c in field_cols]
-            for vals in zip(*series):
-                key = vals[0]
-                if key is None:
-                    raise ValueError("null sample key in WebDataset write")
-                key = str(key)
-                for (col, ext), v in zip(field_cols.items(), vals[1:]):
-                    if v is None:
-                        # loud, not b"None" (write_safetensors lesson)
-                        raise ValueError(
-                            f"null value in WebDataset write "
-                            f"(key={key!r}, column={col!r})")
-                    data = bytes(v) if isinstance(v, (bytes, bytearray)) \
-                        else str(v).encode("utf-8")
-                    samples.append((key, ext, data))
-        if samples:
-            pid = f"{TaskContext.get().partitionId():06d}"
-            final = os.path.join(path, f"shard-{pid}.tar")
-            tmp = f"{final}.tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "wb") as f:
-                f.write(encode_webdataset(samples))
-            os.replace(tmp, final)
-            yield pd.DataFrame({"shard": [pid], "samples": [len(samples)]})
+        # positional zip, not itertuples+getattr: pandas mangles
+        # non-identifier column names ("my col" → _1) under itertuples,
+        # which would getattr the wrong field
+        series = [pdf[key_col]] + [pdf[c] for c in field_cols]
+        for vals in zip(*series):
+            key = vals[0]
+            if key is None:
+                raise ValueError("null sample key in WebDataset write")
+            key = str(key)
+            for (col, ext), v in zip(field_cols.items(), vals[1:]):
+                if v is None:
+                    # loud, not b"None" (write_safetensors lesson)
+                    raise ValueError(
+                        f"null value in WebDataset write "
+                        f"(key={key!r}, column={col!r})")
+                data = bytes(v) if isinstance(v, (bytes, bytearray)) \
+                    else str(v).encode("utf-8")
+                samples.append((key, ext, data))
+        return [encode_webdataset(samples)]
 
-    df.select(*[F.col(c) for c in cols]).mapInPandas(
-        dump, "shard string, samples long"
-    ).write.format("noop").mode("overwrite").save()
+    write_shards(df.select(key_col, *field_cols), path, encode,
+                 "shard-%06d.tar")
 
 
 def read_webdataset(spark, path_glob: str):
-    """Distributed WebDataset read: one binaryFile task per tar shard →
-    one row per (shard, key, ext, data, n_bytes). Pivot on ext to
-    assemble samples."""
+    """Distributed WebDataset read through ``sources/shards.py``: one
+    decode per tar shard → one row per (shard, key, ext, data, n_bytes).
+    Pivot on ext to assemble samples."""
     import os
 
     import pandas as pd
 
-    files = spark.read.format("binaryFile").load(path_glob)
-    # binaryFile packs small files into few splits (see warc_lite
-    # read_warc) — re-spread one row per shard for decode parallelism
-    n_files = files.select("path").count()  # listing-only, cheap
-    if n_files > 1:
-        par = files.sparkSession.sparkContext.defaultParallelism
-        files = files.repartition(min(n_files, 2 * par), "path")
+    from pygdf_spark.sources.shards import read_shards
 
-    def scan(batches):
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                for key, ext, body in decode_webdataset(bytes(content)):
-                    rows.append({
-                        "shard": os.path.basename(p), "key": key,
-                        "ext": ext, "data": body, "n_bytes": len(body),
-                    })
-            yield pd.DataFrame(
-                rows, columns=["shard", "key", "ext", "data", "n_bytes"],
-            ).astype({"n_bytes": "int64"})
+    def scan(p, content):
+        out = pd.DataFrame(decode_webdataset(content),
+                           columns=["key", "ext", "data"])
+        out.insert(0, "shard", os.path.basename(p))
+        out["n_bytes"] = out["data"].map(len).astype("int64")
+        return out
 
-    return files.select("path", "content").mapInPandas(
-        scan, "shard string, key string, ext string, data binary, n_bytes long"
-    )
+    return read_shards(
+        spark, path_glob, scan,
+        "shard string, key string, ext string, data binary, n_bytes long")

@@ -1,10 +1,11 @@
 """NPY/safetensors spec-codec tests: hand-built bitstreams (independent
-of the encoders), round-trips, malformed rejection, and the distributed
-shard-directory read path."""
+of the encoders), round-trips, malformed rejection, and the shard sink
+and source (``sources/shards.py``) under every container writer."""
 
 from __future__ import annotations
 
 import json
+import re
 import struct
 
 import numpy as np
@@ -96,25 +97,195 @@ def test_safetensors_roundtrip_and_errors():
         decode_safetensors(struct.pack("<Q", len(hdr2)) + hdr2 + b"\x00" * 8)
 
 
-def test_npy_shard_dir_roundtrip(spark, tmp_path):
+def _jobs(spark, fn):
+    """(result of fn(), number of Spark jobs it launched)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"shard-io-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "shard io test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _vectors(spark, n: int, parts: int):
+    """n (vec_id, float32 embedding, text) rows over ``parts`` partitions."""
+    rows = [(i, [float(np.float32(i / 7 + j)) for j in range(4)],
+             f"doc {i} " * (i % 5)) for i in range(n)]
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, text string"
+    ).repartition(parts)
+
+
+def _vec_rows(rows):
+    return {(r["vec_id"], tuple(r["embedding"])) for r in rows}
+
+
+def _inventory(rows):
+    """safetensors inventory rows → {tensor: (dtype, n_elems, sum_milli)}
+    summed over shards."""
+    out: dict = {}
+    for r in rows:
+        _, n, m = out.get(r["tensor"], (None, 0, 0))
+        out[r["tensor"]] = (r["dtype"], n + r["n_elems"], m + r["sum_milli"])
+    return out
+
+
+def _expected_inventory(rows):
+    ids = np.array([r["vec_id"] for r in rows], np.int64)
+    emb = np.array([r["embedding"] for r in rows], np.float32)
+    return {
+        "vec_id": ("int64", ids.size, int(ids.sum()) * 1000),
+        "embedding": ("float32", emb.size,
+                      int(np.floor(emb.astype("f8") * 1000).astype("i8").sum())),
+    }
+
+
+def _write(name, df, path):
+    from pygdf_spark.sources.npy_lite import write_npy_dir, write_npz_dir
+    from pygdf_spark.sources.safetensors_lite import write_safetensors
+    from pygdf_spark.sources.warc_lite import write_warc_dir
+    from pygdf_spark.sources.webdataset_lite import write_webdataset
+
+    if name == "npy":
+        write_npy_dir(df, path, "vec_id", "embedding")
+    elif name == "npz":
+        write_npz_dir(df, path, "vec_id", "embedding")
+    elif name == "safetensors":
+        write_safetensors(df, path, {"vec_id": "int64", "embedding": "float32"})
+    elif name == "warc":
+        write_warc_dir(
+            df.selectExpr("concat('https://x/', vec_id) AS uri",
+                          "'2026-01-01T00:00:00Z' AS d",
+                          "CAST(vec_id AS STRING) AS rid", "text"),
+            path, "uri", "d", "rid", "text")
+    else:
+        write_webdataset(df.selectExpr("CAST(vec_id AS STRING) AS k", "text"),
+                         path, "k", {"text": "txt"})
+
+
+def _read(name, spark, path):
+    """The reader's DataFrame for ``path`` (built, not run)."""
+    from pygdf_spark.sources.npy_lite import read_npy_dir, read_npz_dir
+    from pygdf_spark.sources.safetensors_lite import read_safetensors
+    from pygdf_spark.sources.warc_lite import read_warc
+    from pygdf_spark.sources.webdataset_lite import read_webdataset
+
+    return {"npy": read_npy_dir, "npz": read_npz_dir,
+            "safetensors": read_safetensors, "warc": read_warc,
+            "webdataset": read_webdataset}[name](spark, path)
+
+
+def _normalized(name, rows):
+    """Comparable form of a reader's rows."""
+    if name in ("npy", "npz"):
+        return _vec_rows(rows)
+    if name == "safetensors":
+        return _inventory(rows)
+    if name == "warc":
+        return {(int(r["record_id"]), bytes(r["payload"]).decode()) for r in rows}
+    return {(int(r["key"]), bytes(r["data"]).decode()) for r in rows}
+
+
+def _source(name, rows):
+    """Comparable form of the source rows, in ``_normalized``'s terms."""
+    if name in ("npy", "npz"):
+        return _vec_rows(rows)
+    if name == "safetensors":
+        return _expected_inventory(rows)
+    return {(r["vec_id"], r["text"]) for r in rows}
+
+
+SHARD_WRITERS = ["npy", "npz", "safetensors", "warc", "webdataset"]
+
+
+@pytest.mark.parametrize("name", SHARD_WRITERS)
+def test_shard_writer_roundtrip(spark, tmp_path, name):
+    """Every shard writer round-trips through its reader: float32 bits,
+    ids, payload bytes survive; one shard per non-empty partition; no
+    ``<final>.tmp-<uuid>`` file is left behind."""
+    import os
+
+    df = _vectors(spark, 40, 3)
+    path = str(tmp_path / name)
+    _write(name, df, path)
+    names = os.listdir(path)
+    assert names and not [n for n in names if ".tmp-" in n]
+    assert len(names) == (6 if name == "npy" else 3)
+    back = _read(name, spark, path).collect()
+    assert _normalized(name, back) == _source(name, df.collect())
+
+
+@pytest.mark.parametrize("name", SHARD_WRITERS)
+def test_shard_writer_refuses_nonempty_target(spark, tmp_path, name):
+    """A second write to a shard directory raises before any Spark job:
+    stale shards of the first write would otherwise be read back with
+    the new ones."""
+    path = str(tmp_path / name)
+    first = _vectors(spark, 40, 4)
+    _write(name, first, path)
+    second = _vectors(spark, 4, 2)
+
+    def rewrite():
+        with pytest.raises(FileExistsError, match=re.escape(path)):
+            _write(name, second, path)
+
+    _, jobs = _jobs(spark, rewrite)
+    assert jobs == 0
+    back = _read(name, spark, path).collect()
+    assert _normalized(name, back) == _source(name, first.collect())
+
+
+@pytest.mark.parametrize("name", ["npy", "npz"])
+def test_empty_shard_dir_reads_as_zero_rows(spark, tmp_path, name):
+    """A 0-row write leaves an empty directory that reads back as 0 rows
+    with the declared schema; a missing directory still raises."""
+    path = str(tmp_path / name)
+    _write(name, _vectors(spark, 0, 2), path)
+    back = _read(name, spark, path)
+    assert back.collect() == []
+    assert back.schema.simpleString() == "struct<vec_id:bigint,embedding:array<float>>"
+    with pytest.raises(Exception, match="PATH_NOT_FOUND"):
+        _read(name, spark, str(tmp_path / "missing")).collect()
+
+
+def test_npy_half_without_partner_raises(spark, tmp_path):
+    """An ids shard whose vecs partner is gone fails the read loudly
+    instead of silently dropping the shard's rows."""
+    import os
+
+    path = str(tmp_path / "npy")
+    _write("npy", _vectors(spark, 40, 2), path)
+    os.remove(os.path.join(path, sorted(n for n in os.listdir(path)
+                                        if n.startswith("vecs-"))[0]))
+    with pytest.raises(Exception, match="half missing"):
+        _read("npy", spark, path).collect()
+
+
+def test_shard_reads_build_without_jobs(spark, tmp_path):
+    """Building any shard read (the five writers' readers and the Avro
+    decoder) launches no Spark job; the files are read when it runs."""
     import pandas as pd
 
-    from pygdf_spark.sources.npy_lite import read_npy_dir, write_npy_dir
+    from pygdf_spark.sources.avro_lite import read_avro_lite, write_avro
 
-    rng = np.random.default_rng(5)
-    pdf = pd.DataFrame({
-        "vec_id": np.arange(40, dtype=np.int64),
-        "embedding": [rng.normal(size=4).astype(np.float32).tolist()
-                      for _ in range(40)],
-    })
-    df = spark.createDataFrame(pdf).repartition(3)
-    path = str(tmp_path / "shards")
-    write_npy_dir(df, path, "vec_id", "embedding")
-    back = read_npy_dir(spark, path).orderBy("vec_id").collect()
-    assert [r["vec_id"] for r in back] == list(range(40))
-    got = np.array([r["embedding"] for r in back], dtype=np.float32)
-    exp = np.array(pdf["embedding"].tolist(), dtype=np.float32)
-    assert np.array_equal(got, exp)  # float32 bits survive exactly
+    df = _vectors(spark, 40, 4)
+    for name in SHARD_WRITERS:
+        path = str(tmp_path / name)
+        _write(name, df, path)
+        _, jobs = _jobs(spark, lambda: _read(name, spark, path))
+        assert jobs == 0, name
+    avro = tmp_path / "avro"
+    avro.mkdir()
+    for i in range(3):
+        write_avro(pd.DataFrame({"k": [i, i + 10]}), str(avro / f"{i}.avro"))
+    back, jobs = _jobs(spark, lambda: read_avro_lite(spark, str(avro)))
+    assert jobs == 0
+    assert sorted(r["k"] for r in back.collect()) == [0, 1, 2, 10, 11, 12]
 
 
 def test_package_level_readers(spark, tmp_path):
@@ -161,7 +332,7 @@ def test_npz_roundtrip_and_malformed(spark, sf_dir, tmp_path):
     write_npz_dir(src, path, "vec_id", "embedding")
     shards = [n for n in os.listdir(path) if n.endswith(".npz")]
     assert len(shards) >= 1 and not [n for n in os.listdir(path)
-                                     if n.startswith(".tmp")]
+                                     if ".tmp-" in n]
     back = read_npz_dir(spark, path)
     a = {r["vec_id"]: r["embedding"] for r in src.collect()}
     b = {r["vec_id"]: r["embedding"] for r in back.collect()}
