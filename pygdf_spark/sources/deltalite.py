@@ -1059,6 +1059,10 @@ def _harvest_add(
 # fans out across executors
 _DRIVER_HARVEST_MAX = 16
 
+# the size a rewriter packs its output files to: compaction bin-packs
+# small files up to it, merge sizes its range-clustered output from it
+_TARGET_FILE_BYTES = 128 << 20
+
 
 def _partition_values_from_rel(rel: str) -> dict:
     """Parse ``__p_<col>=<value>`` hive segments out of a log-relative
@@ -1758,7 +1762,7 @@ def show_partitions(spark: SparkSession, table: str,
 
 def compact_where(
     spark: SparkSession, table: str, predicate: list[tuple],
-    target_bytes: int = 128 << 20, stat_cols: list[str] | None = None,
+    target_bytes: int = _TARGET_FILE_BYTES, stat_cols: list[str] | None = None,
     checkpoint_every: int = 10,
 ) -> dict:
     """OPTIMIZE ... WHERE: bin-pack ONLY the files matching a partition
@@ -1792,7 +1796,7 @@ def compact_where(
 
 
 def compact_small_files(
-    spark: SparkSession, table: str, target_bytes: int = 128 << 20,
+    spark: SparkSession, table: str, target_bytes: int = _TARGET_FILE_BYTES,
     stat_cols: list[str] | None = None, checkpoint_every: int = 10,
 ) -> dict:
     """Size-tiered OPTIMIZE (the Delta bin-packing semantic): rewrite
@@ -1811,7 +1815,7 @@ def compact_small_files(
 
 def maintain(
     spark: SparkSession, table: str,
-    target_bytes: int = 128 << 20,
+    target_bytes: int = _TARGET_FILE_BYTES,
     min_small_files: int = 4,
     max_dv_fraction: float = 0.2,
     keep_versions: int = 5,
@@ -2999,10 +3003,15 @@ def merge_into(
     2. **Touch detection** (one distributed semi-join): the surviving
        candidates are scanned with file lineage (DV-aware — a key whose
        only row is deletion-vectored away does not touch its file) and
-       inner-joined to the (broadcast) source keys — only files that
+       left-semi-joined to the broadcast source keys — only files that
        CONTAIN a matched key are rewritten; every other file rides
        through the commit untouched as pure metadata. A CDC feed
        touching 0.1% of the key space rewrites ~0.1% of the table.
+       The rewrite anti-/semi-joins the touched files to the same
+       broadcast key set, and a range-clustered rewrite (``stat_cols``
+       given) is sized from the log — the touched files' bytes plus the
+       source rows at the table's bytes per row, one file per
+       ``_TARGET_FILE_BYTES`` — instead of by a Spark pass.
 
     Insert detection is sound against candidates only: stats pruning is
     conservative, so any source key absent from the candidate files is
@@ -3080,14 +3089,22 @@ def merge_into(
             f"the table declares {want.simpleString()} — cast the source "
             "key to the table's type first"
         )
-    # one 1-row job: per-key range + the null-key guard (a null merge
-    # key can never match, so it would be re-INSERTED on every CDC
-    # apply — silently non-idempotent; Delta rejects it too)
+    if when_matched == "update":
+        bad = [c for c in set_exprs if c in keys]
+        if bad:
+            raise ValueError(f"merge update cannot SET key columns: {bad}")
+    # one 1-row aggregate (2 jobs under AQE): per-key range + the
+    # null-key guard (a null merge key can never match, so it would be
+    # re-INSERTED on every CDC apply — silently non-idempotent; Delta
+    # rejects it too) + update mode's distinct-key count
     aggs = [F.count("*")]
     for k in keys:
         aggs += [F.min(k), F.max(k), F.sum(F.col(k).isNull().cast("long"))]
+    if when_matched == "update":
+        aggs.append(F.count_distinct(*[F.col(k) for k in keys]))
     row = source.agg(*aggs).collect()[0]
-    if row[0] == 0:  # empty source: nothing to do, no empty-file commit
+    n_src = row[0]
+    if n_src == 0:  # empty source: nothing to do, no empty-file commit
         return noop
     ranges = {}
     for i, k in enumerate(keys):
@@ -3099,6 +3116,13 @@ def merge_into(
                 "every apply; filter or key them first"
             )
         ranges[k] = (_json_safe(lo), _json_safe(hi))
+    # a duplicate source key would multiply matched target rows (keys
+    # are non-null here, so the distinct count covers every row)
+    if when_matched == "update" and row[-1] != n_src:
+        raise ValueError(
+            "merge update: source keys must be unique "
+            f"({n_src} rows, {row[-1]} distinct keys)"
+        )
 
     cm = table_column_mapping(table)
 
@@ -3115,7 +3139,10 @@ def merge_into(
         return True
 
     candidates = [a for a in live if is_candidate(a)]
-    src_keys = source.select(*keys).distinct()
+    # the source's key set, broadcast to every join below: no distinct
+    # (a shuffle before the broadcast could build) — a semi/anti join
+    # ignores duplicate build keys, and the null guard above ran
+    src_keys = F.broadcast(source.select(*keys))
 
     touched_rel: list[str] = []
     if candidates:
@@ -3127,7 +3154,7 @@ def merge_into(
             _log_rel(r[0])
             for r in _read_adds(spark, table, candidates, lineage=True)
             .select("__dl_file", *keys)
-            .join(F.broadcast(src_keys), on=keys, how="inner")
+            .join(src_keys, on=keys, how="left_semi")
             .select("__dl_file")
             .distinct()
             .collect()
@@ -3151,18 +3178,6 @@ def merge_into(
         # MERGE ... WHEN MATCHED THEN UPDATE SET col = expr — exprs see
         # the PRE-update target row plus the source row's columns as
         # ``src_<col>`` (simultaneous assignment, like update_where).
-        bad = [c for c in set_exprs if c in keys]
-        if bad:
-            raise ValueError(f"merge update cannot SET key columns: {bad}")
-        # a duplicate source key would multiply matched target rows
-        n_all, n_dist = source.select(
-            F.count(F.lit(1)), F.count_distinct(*[F.col(k) for k in keys])
-        ).first()
-        if n_all != n_dist:
-            raise ValueError(
-                "merge update: source keys must be unique "
-                f"({n_all} rows, {n_dist} distinct keys)"
-            )
         src_pref = source.select(
             *keys,
             *[F.col(c).alias(f"src_{c}") for c in source.columns
@@ -3181,10 +3196,8 @@ def merge_into(
             j = existing.join(F.broadcast(src_pref), on=keys, how="left")
             parts.append(_set_projection(j, existing.schema, set_exprs,
                                          F.col("__dl_m")))
-            matched_keys = (
-                existing.select(*keys)
-                .join(F.broadcast(src_keys), on=keys, how="inner")
-                .distinct()
+            matched_keys = existing.select(*keys).join(
+                src_keys, on=keys, how="left_semi"
             )
         if insert_unmatched:
             inserts = source
@@ -3206,6 +3219,18 @@ def merge_into(
     else:
         rewritten = source
     deleting = when_matched == "delete"
+    # size the clustered rewrite from the log the way compact_where
+    # does: the touched files' bytes plus the source rows at the live
+    # files' bytes per row. Asking the frame for its partition count
+    # instead runs every upstream AQE stage once more before the write.
+    sized = [a for a in live if a.get("rows")]
+    target_files = None  # no live rows: no bytes per row to go by
+    if sized:
+        est = sum(int(a.get("bytes") or 0) for a in touched_adds)
+        if not deleting:
+            est += n_src * sum(int(a.get("bytes") or 0) for a in sized) \
+                // sum(int(a["rows"]) for a in sized)
+        target_files = max(1, -(-est // _TARGET_FILE_BYTES))  # ceil
     # declare like append: a narrower source key (int into a long
     # table) must not re-declare the column over the existing files
     version = _rewrite_commit(
@@ -3214,7 +3239,7 @@ def merge_into(
         schema if deleting else _union_decl_schema(schema, rewritten.schema),
         checkpoint_every,
         stat_cols, cluster_by=keys if stat_cols else None,
-        check=not deleting, txn=txn,
+        target_files=target_files, check=not deleting, txn=txn,
     )
     return {
         "version": version,

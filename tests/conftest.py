@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -17,6 +18,24 @@ def spark():
 
     s = get_spark("pygdf-spark-tests")
     yield s
+
+
+@pytest.fixture(scope="session")
+def jobs(spark):
+    """``jobs(fn)`` → (fn(), number of Spark jobs it launched)."""
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"test-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job-counting test")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

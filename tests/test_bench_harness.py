@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import os
 import sys
-import uuid
 
 import pytest
 
@@ -18,19 +17,6 @@ import make_sf1
 
 def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def _jobs(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` launched."""
-    sc = spark.sparkContext
-    group = f"harness-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "bench harness test")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _views(spark) -> set[str]:
@@ -54,7 +40,7 @@ def test_scale_factor(path, sf):
     assert bench.scale_factor(path) == sf
 
 
-def test_reset_drops_cached_frames_and_sink_views(spark, sf_dir):
+def test_reset_drops_cached_frames_and_sink_views(spark, sf_dir, jobs):
     bench.reset(spark)
     before = _views(spark)
     bench.force(_with_memory_sink(spark, sf_dir))
@@ -62,7 +48,7 @@ def test_reset_drops_cached_frames_and_sink_views(spark, sf_dir):
     spark.range(5).cache().count()
     spark.range(3).createOrReplaceTempView("harness_keep_me")
     assert not _cache_empty(spark)
-    assert _jobs(spark, lambda: bench.reset(spark)) == 0
+    assert jobs(lambda: bench.reset(spark))[1] == 0
     assert _cache_empty(spark)
     assert _views(spark) == before | {"harness_keep_me"}
     spark.catalog.dropTempView("harness_keep_me")

@@ -233,7 +233,7 @@ def test_bpe_fast_equals_distributed_trainer(spark, sf_dir):
     assert a == b
 
 
-def test_bpe_fast_is_one_job_regardless_of_merges(spark):
+def test_bpe_fast_is_one_job_regardless_of_merges(spark, jobs):
     """256 merges must cost exactly ONE Spark job (the r6 verdict's
     driver-latency wall: one job per merge at 30k merges)."""
     from pygdf_spark.operators.bpe import bpe_train_fast
@@ -241,17 +241,12 @@ def test_bpe_fast_is_one_job_regardless_of_merges(spark):
     df = spark.createDataFrame(
         [("aa bb aa cc aa bb",)] * 50, "text string"
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("bpe_fast_jobcount", "bpe fast job counting")
-    try:
-        bpe_train_fast(df, F.split(F.trim(F.col("text")), r"\s+"), 256)
-    finally:
-        sc.setJobGroup(None, None)
-    st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup("bpe_fast_jobcount")
+    _, n = jobs(lambda: bpe_train_fast(
+        df, F.split(F.trim(F.col("text")), r"\s+"), 256
+    ))
     # AQE may stage the vocab shuffle as 2 jobs; the point is the count
     # is CONSTANT in n_merges (sequential training = 1+ job per merge)
-    assert len(jobs) <= 2, f"expected <=2 jobs, saw {len(jobs)}"
+    assert n <= 2, f"expected <=2 jobs, saw {n}"
 
 
 def test_bpe_fast_vocab_cap_is_deterministic(spark):

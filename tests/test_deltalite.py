@@ -344,6 +344,105 @@ def test_merge_null_key_is_loud_and_empty_source_noop(spark, sf_dir, table):
     assert dl.table_version(table) == v  # no empty commit
 
 
+def _ingest_shape(spark, sf_med, table):
+    """The lake benchmark's pass up to its merge: 5 appends of 400
+    key-consecutive ``orders`` rows as 4 files each (20 files), then a
+    200-row local source frame, about half of it updates of live keys.
+    Returns (source, expected {key: totalprice} after the merge)."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    path = os.path.join(sf_med, "orders.parquet")
+    pdf = pq.read_table(path).sort_by("o_orderkey").to_pandas()
+    schema = spark.read.parquet(path).schema
+    for b in range(5):
+        dl.append(
+            spark.createDataFrame(pdf.iloc[400 * b:400 * (b + 1)], schema)
+            .repartition(4),
+            table, stat_cols=["o_orderkey"], txn=("ingest", b),
+        )
+    upd = pdf.iloc[3:2000:20].copy()
+    upd["o_totalprice"] += 1.0
+    src = spark.createDataFrame(pd.concat([pdf.iloc[2000:2100], upd]), schema)
+    want = dict(zip(pdf.o_orderkey.iloc[:2100], pdf.o_totalprice.iloc[:2100]))
+    want.update(zip(upd.o_orderkey, upd.o_totalprice))
+    return src, want
+
+
+def test_merge_job_budget(spark, sf_med, table, jobs):
+    """The benchmark's merge shape runs in at most 8 Spark jobs: the
+    range aggregate (2), the touch pass, whose source keys broadcast
+    without a distinct first, and a rewrite sized from the log, which
+    asks no frame for its partition count (13 before)."""
+    src, want = _ingest_shape(spark, sf_med, table)
+    res, n = jobs(lambda: dl.merge_into(spark, table, src, on="o_orderkey",
+                                        stat_cols=["o_orderkey"]))
+    assert n <= 8, n
+    assert res["files_rewritten"] == res["files_total"] == 20
+    got = dl.read_table(spark, table).select("o_orderkey", "o_totalprice")
+    assert dict(got.collect()) == want
+
+
+def test_merge_output_sized_from_log(spark, sf_med, table):
+    """A 200-row merge into 20 small files writes ONE range-clustered
+    file (the log puts the rewrite far under the target file size),
+    and its zone map covers exactly the keys it holds."""
+    import pyarrow.parquet as pq
+
+    src, want = _ingest_shape(spark, sf_med, table)
+    before = {a["path"] for a in dl.live_files(table)}
+    dl.merge_into(spark, table, src, on="o_orderkey",
+                  stat_cols=["o_orderkey"])
+    added = [a for a in dl.live_files(table) if a["path"] not in before]
+    assert len(added) == 1, [a["path"] for a in added]
+    keys = pq.read_table(
+        os.path.join(table, added[0]["path"]), columns=["o_orderkey"]
+    ).column(0).to_pylist()
+    assert keys == sorted(want)
+    stats = added[0]["stats"]["o_orderkey"]
+    assert (stats["min"], stats["max"]) == (keys[0], keys[-1])
+
+
+def test_merge_insert_into_empty_table(spark, table):
+    """A table without live rows gives the log no bytes per row: the
+    clustered insert falls back to the frame's own partition count and
+    still lands non-overlapping zone maps."""
+    df = spark.range(30).selectExpr("id AS k", "id * 2 AS v")
+    dl.append(df.limit(0), table, stat_cols=["k"])
+    assert dl.live_files(table) == []
+    res = dl.merge_into(spark, table, df.repartition(3), on="k",
+                        stat_cols=["k"])
+    assert (res["files_rewritten"], res["files_total"]) == (0, 0)
+    assert sorted(dl.read_table(spark, table).collect()) == sorted(
+        df.collect()
+    )
+    spans = sorted((a["stats"]["k"]["min"], a["stats"]["k"]["max"])
+                   for a in dl.live_files(table))
+    assert len(spans) == 3
+    assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:]))
+
+
+def test_merge_update_duplicate_key_rejected(spark, sf_dir, table, jobs):
+    """Update mode's source-key uniqueness check rides in the range
+    aggregate: a duplicate key raises before the touch pass runs, and
+    nothing is committed."""
+    src_tbl = _orders(spark, sf_dir)
+    dl.append(src_tbl.repartition(2), table, stat_cols=["o_orderkey"])
+    v = dl.table_version(table)
+    dup = src_tbl.orderBy("o_orderkey").limit(5)
+    dup = dup.unionByName(dup.limit(1))
+
+    def merge():
+        with pytest.raises(ValueError, match=r"unique \(6 rows, 5 distinct"):
+            dl.merge_into(spark, table, dup, on="o_orderkey",
+                          when_matched="update",
+                          set_exprs={"o_totalprice": "src_o_totalprice"})
+
+    _, n = jobs(merge)
+    assert n <= 3, n  # the aggregate alone; the touch pass is 3 more
+    assert dl.table_version(table) == v
+
+
 def test_zorder_skips_on_every_dimension(spark, sf_dir, table):
     """The whole point of z-order: BOTH single-column predicates prune
     files. A 1-D sort can only prune on its own column."""

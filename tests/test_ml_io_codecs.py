@@ -97,21 +97,6 @@ def test_safetensors_roundtrip_and_errors():
         decode_safetensors(struct.pack("<Q", len(hdr2)) + hdr2 + b"\x00" * 8)
 
 
-def _jobs(spark, fn):
-    """(result of fn(), number of Spark jobs it launched)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"shard-io-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "shard io test")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _vectors(spark, n: int, parts: int):
     """n (vec_id, float32 embedding, text) rows over ``parts`` partitions."""
     rows = [(i, [float(np.float32(i / 7 + j)) for j in range(4)],
@@ -221,7 +206,7 @@ def test_shard_writer_roundtrip(spark, tmp_path, name):
 
 
 @pytest.mark.parametrize("name", SHARD_WRITERS)
-def test_shard_writer_refuses_nonempty_target(spark, tmp_path, name):
+def test_shard_writer_refuses_nonempty_target(spark, tmp_path, name, jobs):
     """A second write to a shard directory raises before any Spark job:
     stale shards of the first write would otherwise be read back with
     the new ones."""
@@ -234,8 +219,7 @@ def test_shard_writer_refuses_nonempty_target(spark, tmp_path, name):
         with pytest.raises(FileExistsError, match=re.escape(path)):
             _write(name, second, path)
 
-    _, jobs = _jobs(spark, rewrite)
-    assert jobs == 0
+    assert jobs(rewrite)[1] == 0
     back = _read(name, spark, path).collect()
     assert _normalized(name, back) == _source(name, first.collect())
 
@@ -266,7 +250,7 @@ def test_npy_half_without_partner_raises(spark, tmp_path):
         _read("npy", spark, path).collect()
 
 
-def test_shard_reads_build_without_jobs(spark, tmp_path):
+def test_shard_reads_build_without_jobs(spark, tmp_path, jobs):
     """Building any shard read (the five writers' readers and the Avro
     decoder) launches no Spark job; the files are read when it runs."""
     import pandas as pd
@@ -277,14 +261,13 @@ def test_shard_reads_build_without_jobs(spark, tmp_path):
     for name in SHARD_WRITERS:
         path = str(tmp_path / name)
         _write(name, df, path)
-        _, jobs = _jobs(spark, lambda: _read(name, spark, path))
-        assert jobs == 0, name
+        assert jobs(lambda: _read(name, spark, path))[1] == 0, name
     avro = tmp_path / "avro"
     avro.mkdir()
     for i in range(3):
         write_avro(pd.DataFrame({"k": [i, i + 10]}), str(avro / f"{i}.avro"))
-    back, jobs = _jobs(spark, lambda: read_avro_lite(spark, str(avro)))
-    assert jobs == 0
+    back, n = jobs(lambda: read_avro_lite(spark, str(avro)))
+    assert n == 0
     assert sorted(r["k"] for r in back.collect()) == [0, 1, 2, 10, 11, 12]
 
 

@@ -6,7 +6,6 @@ change the inferred schema."""
 from __future__ import annotations
 
 import os
-import uuid
 from contextlib import contextmanager
 
 import pyarrow as pa
@@ -16,19 +15,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import types as T_
 
 from pygdf_spark.queries._util import T
-
-
-def _jobs(spark, fn):
-    """(result of fn(), number of Spark jobs it launched)."""
-    sc = spark.sparkContext
-    group = f"schema-memo-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "schema memo test")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @contextmanager
@@ -48,10 +34,10 @@ def _write(path, **cols):
     pq.write_table(pa.table(cols), path)
 
 
-def test_second_read_launches_no_job(spark, tmp_path):
+def test_second_read_launches_no_job(spark, tmp_path, jobs):
     _write(str(tmp_path / "t.parquet"), a=[1, 2, 3], s=["x", "y", "z"])
-    first, _ = _jobs(spark, lambda: T(spark, str(tmp_path), "t"))
-    second, n = _jobs(spark, lambda: T(spark, str(tmp_path), "t"))
+    first, _ = jobs(lambda: T(spark, str(tmp_path), "t"))
+    second, n = jobs(lambda: T(spark, str(tmp_path), "t"))
     assert n == 0
     assert second.schema == first.schema
     assert second.count() == 3
@@ -67,13 +53,13 @@ def test_rewritten_file_returns_new_schema(spark, tmp_path):
     assert sorted(r.b for r in df.collect()) == ["p", "q", "r"]
 
 
-def test_part_file_added_to_directory_table_is_seen(spark, tmp_path):
+def test_part_file_added_to_directory_table_is_seen(spark, tmp_path, jobs):
     table = tmp_path / "t.parquet"
     spark.range(6).selectExpr("id AS a").repartition(3).write.parquet(str(table))
     with _conf(spark, "spark.sql.parquet.mergeSchema", "true"):
         assert T(spark, str(tmp_path), "t").count() == 6
         _write(str(table / "part-99999-extra.parquet"), a=[100, 101], b=["p", "q"])
-        df, n = _jobs(spark, lambda: T(spark, str(tmp_path), "t"))
+        df, n = jobs(lambda: T(spark, str(tmp_path), "t"))
         assert n > 0  # the new file's identity missed the memo
         assert df.columns == ["a", "b"]
         assert df.count() == 8
@@ -98,7 +84,7 @@ def test_binary_as_string_conf_is_part_of_the_key(spark, tmp_path):
         assert sorted(r.b for r in df.collect()) == ["ab", "cd"]
 
 
-def test_gd_read_parquet_second_read_launches_no_job(spark, tmp_path):
+def test_gd_read_parquet_second_read_launches_no_job(spark, tmp_path, jobs):
     import pygdf_spark as gd
 
     path = str(tmp_path / "t.parquet")
@@ -108,7 +94,7 @@ def test_gd_read_parquet_second_read_launches_no_job(spark, tmp_path):
         return gd.read_parquet(path, spark=spark, columns=["s"], filters="a > 2")
 
     read()
-    second, n = _jobs(spark, read)
+    second, n = jobs(read)
     assert n == 0
     assert list(second.columns) == ["s"]
     assert sorted(second.to_pandas()["s"]) == ["y", "z"]
