@@ -5,9 +5,12 @@ Determinism discipline (critical for the DuckDB oracle hash-compare):
 - **Floating-point aggregates are order-dependent.** Spark and DuckDB sum
   doubles in different orders, so ``SUM(double)`` can differ in the last
   few ulps and break a value-hash. Every money/quantity aggregate here
-  first casts to an exact DECIMAL (the source data has fixed scale), sums
-  exactly, and only then casts the *result* to double — both engines then
-  produce bit-identical doubles.
+  sums exact integers and only then casts the *result* to double — both
+  engines then produce bit-identical doubles. Money sums are
+  ``isum(cents(...))``: int64 cents (or products of cents) summed in
+  int64 lanes and recombined once per group, with no per-row decimal
+  work (the oracle sums the same BIGINTs in HUGEINT). The ``dsum``
+  sums elsewhere cast to ``decimal(12,2)`` and sum exactly.
 - **Statistical moments** (variance/correlation/skew) are computed from
   exact integer/decimal power sums with one final double expression,
   identical in both engines, instead of the built-in order-dependent
@@ -225,17 +228,65 @@ def events_ts(spark, sf_dir: str):
 
 
 def cents(col):
-    """Exact int64 cents of a scale-2 double column — THE determinism
-    idiom for money arithmetic (q1 docstring in relational.py: fixture
-    money is exact at scale 2, so round(x*100) has no ties and the row
-    pipeline stays codegen'd int64 instead of per-row BigDecimal).
-    Single source of truth; the oracle-side mirror is sql_cents."""
+    """Exact int64 cents of a double column — THE determinism idiom
+    for money arithmetic, and the oracle-side mirror is sql_cents.
+
+    Bit-identical to ``F.round(col * 100, 0).cast("long")`` for every
+    double (ties, negatives, ±0, NaN, ±inf, null, magnitudes past
+    2**52), but in plain double ops: Spark evaluates that round as
+    ``BigDecimal.valueOf(v).setScale(0, HALF_UP)`` per row, a
+    ``Double.toString`` each. Here ``rint`` rounds every non-tie to
+    nearest; a tie (``|v| - floor(|v|)`` is exact, so ``== 0.5`` finds
+    exactly the ties) goes away from zero. NaN and ±inf fall through
+    to ``rint`` and cast as Spark's round does."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * 100, 0).cast("long")
+    v = c * 100
+    a = F.abs(v)
+    f = F.floor(a)
+    return (
+        F.when(a - f == 0.5, F.signum(v) * (f + 1))
+        .otherwise(F.rint(v))
+        .cast("long")
+    )
+
+
+# Bits of isum's low lane. A test seam, not an option: a test widens
+# the lane to bring the row bound down to a size it can build.
+_ISUM_LANE_BITS = 32
+
+
+def isum(col):
+    """Exact SUM of an int64 column, summed in int64 lanes — equal to
+    ``SUM(CAST(col AS DECIMAL(38,0)))`` without its per-row BigInteger
+    buffer round trip. Each value splits into a signed high lane
+    ``col >> 32`` and an unsigned low lane ``col & 0xFFFFFFFF``; each
+    lane sums as a plain long and the two recombine once per group as
+    ``decimal(38,0)``. NULL for a group without a non-null value.
+
+    Neither lane can leave int64 in a group of at most 2**31 rows,
+    whatever the values, so the sum is exact there. A larger group
+    raises instead of wrapping or returning NULL: the guard is the
+    group's row count, one shared ``count(1)`` buffer. On q1 at sf0.1
+    it costs 0.01 s; ``try_sum`` lanes with a non-null marker cost
+    0.6 s."""
+    c = F.col(col) if isinstance(col, str) else col
+    bits = _ISUM_LANE_BITS
+    mask = (1 << bits) - 1
+    # low lanes lie in [0, mask], high lanes in [-2**(63-bits), 2**(63-bits))
+    max_rows = min(1 << bits, ((1 << 63) - 1) // mask)
+    hi = F.sum(F.shiftright(c, bits)).cast("decimal(20,0)")
+    lo = F.sum(c.bitwiseAND(F.lit(mask))).cast("decimal(20,0)")
+    return F.when(
+        F.count(F.lit(1)) > max_rows,
+        F.raise_error(F.lit(
+            f"isum: a group of more than {max_rows} rows can overflow "
+            "its int64 lanes"
+        )),
+    ).otherwise((hi * F.lit(1 << bits) + lo).cast("decimal(38,0)"))
 
 
 def sql_cents(col: str) -> str:
-    """DuckDB fragment mirroring ``cents`` byte-for-byte in semantics:
-    CAST(round(col * 100, 0) AS BIGINT). Both engines round scale-2
-    doubles half-away-from-zero at *100 — tie-free on this data."""
+    """DuckDB fragment mirroring ``cents``:
+    CAST(round(col * 100, 0) AS BIGINT). Both engines round the double
+    ``col * 100`` half-away-from-zero."""
     return f"CAST(round({col} * 100, 0) AS BIGINT)"

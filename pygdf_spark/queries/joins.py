@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pygdf_spark.queries._util import T, dec
+from pygdf_spark.queries._util import T, cents, dec, isum
 
 
 def join_inner_q3(spark, sf_dir):
@@ -29,18 +29,14 @@ def join_inner_q3(spark, sf_dir):
     o = T(spark, sf_dir, "orders")
     li = T(spark, sf_dir, "lineitem")
     # integer-cents revenue (see q1_pricing_summary): int64 per-row
-    # product, 128-bit decimal sum, one output rounding — the decimal
+    # product, exact int64-lane sum, one output rounding — the decimal
     # multiply chain was the dominant per-row cost at 32x
-    pc = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
-    dc = F.round(F.col("l_discount") * 100, 0).cast("long")
-    du = pc * (F.lit(100).cast("long") - dc)
+    du = cents("l_extendedprice") * (F.lit(100).cast("long") - cents("l_discount"))
     return (
         c.join(o, c.c_custkey == o.o_custkey, "inner")
         .join(li, o.o_orderkey == li.l_orderkey, "inner")
         .groupBy("o_orderkey", "o_orderdate")
-        .agg(
-            (F.sum(du.cast("decimal(25,0)")).cast("double") / 10000.0).alias("revenue")
-        )
+        .agg((isum(du).cast("double") / 10000.0).alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey").asc())
         .limit(10)
     )

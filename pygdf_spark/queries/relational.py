@@ -13,55 +13,55 @@ Reference parity notes (cited into /root/reference):
 - clip                 : cpp/include/cudf/replace.hpp:202
 - replace_nulls/fillna : cpp/include/cudf/replace.hpp:50; core/frame.py:1193
 
-All double aggregates go through exact-decimal sums (see _util docstring)
-so the DuckDB oracle hash-matches bit-for-bit.
+All double aggregates go through exact integer or decimal sums (see the
+_util docstring) so the DuckDB oracle hash-matches bit-for-bit.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pygdf_spark.queries._util import T, cents as _util_cents, dsum
+from pygdf_spark.queries._util import T, cents, dsum, isum
 
 
 # --- TPC-H Q1 shape: the flagship scan→filter→agg→sort -----------------
 
 def q1_pricing_summary(spark, sf_dir):
     """TPC-H Q1 in exact INTEGER-CENTS arithmetic: every money/qty
-    column quantizes to int64 cents map-side (`round(x*100)` —
-    half-away in both engines; the source data is exact at scale 2, so
-    no tie exists and the integer equals the decimal cast), per-row
-    products stay in int64 (|price_c·(100-disc_c)·(100+tax_c)| ≲ 1e11),
-    and only the SUM runs in 128-bit decimal — overflow-safe at any
-    corpus size. One order-independent rounding at the output (int →
-    double → scale divide, mirrored verbatim in the oracle).
+    column quantizes to int64 cents map-side (``cents``: round(x*100)
+    half away from zero, as DuckDB's round does), per-row products stay
+    in int64 (|price_c·(100-disc_c)·(100+tax_c)| ≲ 1e11), and each SUM
+    runs in ``isum``'s two int64 lanes, exact for any group of up to
+    2**31 rows (a larger group raises). One order-independent rounding
+    at the output (int → double → scale divide, mirrored verbatim in
+    the oracle).
 
-    Why not DECIMAL end-to-end: JVM decimal multiply/sum is the
-    dominant cost at scale — measured 9.3s vs 1.6s for this plan at
-    32×sf0.1 (the decimal path's per-row BigDecimal work swamps the
-    scan; the cents plan keeps the whole row pipeline in codegen'd
-    int64)."""
-    from pygdf_spark.queries._util import cents, spread
-
-    li = spread(T(spark, sf_dir, "lineitem"))  # 1-task scan: guide §2.5
+    No row does BigDecimal work. ``F.round`` on a double runs
+    ``BigDecimal.valueOf(v).setScale(...)`` (a ``Double.toString``) per
+    value, and a ``SUM(CAST(x AS DECIMAL(25,0)))`` reads and writes a
+    ``BigInteger`` in its decimal(35,0) buffer per row; with both gone
+    the row pipeline is codegen'd int64 and q1 at sf0.1 takes 0.9 s
+    instead of 1.7 s (4 vCPU). That made the round-robin ``spread`` of
+    the 1-task lineitem scan a loss (1.6 s with it; even at 10× sf0.1),
+    so the scan is read as it is."""
+    li = T(spark, sf_dir, "lineitem")
 
     qc, pc = cents("l_quantity"), cents("l_extendedprice")
     dc, tc = cents("l_discount"), cents("l_tax")
     du = pc * (F.lit(100).cast("long") - dc)          # 1e-4 dollar units
     cu = du * (F.lit(100).cast("long") + tc)          # 1e-6 dollar units
-    d25 = "decimal(25,0)"
     n = F.count(F.lit(1))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            (F.sum(qc.cast(d25)).cast("double") / 100.0).alias("sum_qty"),
-            (F.sum(pc.cast(d25)).cast("double") / 100.0).alias("sum_base_price"),
-            (F.sum(du.cast(d25)).cast("double") / 10000.0).alias("sum_disc_price"),
-            (F.sum(cu.cast(d25)).cast("double") / 1000000.0).alias("sum_charge"),
-            ((F.sum(qc.cast(d25)).cast("double") / 100.0) / n).alias("avg_qty"),
-            ((F.sum(pc.cast(d25)).cast("double") / 100.0) / n).alias("avg_price"),
-            ((F.sum(dc.cast(d25)).cast("double") / 100.0) / n).alias("avg_disc"),
+            (isum(qc).cast("double") / 100.0).alias("sum_qty"),
+            (isum(pc).cast("double") / 100.0).alias("sum_base_price"),
+            (isum(du).cast("double") / 10000.0).alias("sum_disc_price"),
+            (isum(cu).cast("double") / 1000000.0).alias("sum_charge"),
+            ((isum(qc).cast("double") / 100.0) / n).alias("avg_qty"),
+            ((isum(pc).cast("double") / 100.0) / n).alias("avg_price"),
+            ((isum(dc).cast("double") / 100.0) / n).alias("avg_disc"),
             n.alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
@@ -103,14 +103,10 @@ def q6_forecast_revenue(spark, sf_dir):
         )
         .agg(
             # integer-cents product (see q1): price_c·disc_c in 1e-4
-            # dollar units, 128-bit decimal sum, one output rounding
+            # dollar units, exact int64-lane sum, one output rounding
             (
-                F.sum(
-                    (
-                        _util_cents("l_extendedprice")
-                        * _util_cents("l_discount")
-                    ).cast("decimal(25,0)")
-                ).cast("double")
+                isum(cents("l_extendedprice") * cents("l_discount"))
+                .cast("double")
                 / 10000.0
             ).alias("revenue")
         )

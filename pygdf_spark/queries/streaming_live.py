@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pygdf_spark.queries._util import cents
 from pygdf_spark.streaming import (
     dedup_first_per_key,
     enrich_with_dim,
@@ -232,7 +233,7 @@ def sstream_lake_sink_live(spark, sf_dir):
     return snap.agg(
         F.count("*").alias("n_purchases"),
         F.sum("event_id").alias("id_sum"),
-        F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("value_cents"),
+        F.sum(cents("value")).alias("value_cents"),
     )
 
 
@@ -270,7 +271,7 @@ def sstream_lake_source_live(spark, sf_dir):
 
     ev = events_ts(spark, sf_dir).select(
         "event_id", "user_id", "event_type",
-        F.round(F.col("value") * 100, 0).cast("long").alias("v_c"),
+        cents("value").alias("v_c"),
     )
     dl.append(ev.filter(F.col("event_id") % 3 == 0).repartition(2), table)
     dl.append(ev.filter(F.col("event_id") % 3 == 1).repartition(2), table)
@@ -324,7 +325,7 @@ def sstream_lake_cdf_live(spark, sf_dir):
 
     ev = events_ts(spark, sf_dir).select(
         "event_id", "user_id", "event_type",
-        F.round(F.col("value") * 100, 0).cast("long").alias("v_c"),
+        cents("value").alias("v_c"),
     )
     dl.append(ev.repartition(4), table)                       # v0
     dl.delete_where(spark, table, "event_type = 'view'")      # v1
@@ -412,8 +413,7 @@ def sstream_lake_merge_live(spark, sf_dir):
             bdf.filter(F.col("event_type") == "purchase")
             .groupBy("user_id")
             .agg(
-                F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-                .alias("total_cents"),
+                F.sum(cents("value")).alias("total_cents"),
                 F.count(F.lit(1)).alias("n_buys"),
             )
         )

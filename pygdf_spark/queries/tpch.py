@@ -15,8 +15,8 @@ filtered `part`) are explicitly broadcast, fact-fact joins shuffle on
 their keys.
 
 Determinism discipline (see queries/_util.py): every money aggregate
-runs in exact integer cents (1e-2/1e-4/1e-6 dollar units) with a
-128-bit exact sum and ONE final int->double cast mirrored verbatim in
+runs in exact integer cents (1e-2/1e-4/1e-6 dollar units) with an
+exact ``isum`` and ONE final int->double cast mirrored verbatim in
 the DuckDB oracle; every LIMIT sits under a total-order ORDER BY
 (unique tiebreak columns) so both engines pick identical rows.
 """
@@ -25,28 +25,21 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pygdf_spark.queries._util import T, cents as _util_cents, sql_cents, spread
-
-D25 = "decimal(25,0)"
-
-
-def _cents(col):
-    """Exact int64 cents (single source: queries._util.cents)."""
-    return _util_cents(col)
+from pygdf_spark.queries._util import T, cents, isum, sql_cents
 
 
 def _rev_u():
     """Per-row revenue in 1e-4 dollar units: price_c * (100 - disc_c),
     int64 (|.| <= ~1e9) — whole-stage-codegen-friendly."""
-    return _cents("l_extendedprice") * (
-        F.lit(100).cast("long") - _cents("l_discount")
+    return cents("l_extendedprice") * (
+        F.lit(100).cast("long") - cents("l_discount")
     )
 
 
 def _drev(alias: str):
-    """Order-independent double revenue: exact decimal sum of unit
-    revenue, one cast, one scale divide."""
-    return (F.sum(_rev_u().cast(D25)).cast("double") / 10000.0).alias(alias)
+    """Order-independent double revenue: exact sum of unit revenue,
+    one cast, one scale divide."""
+    return (isum(_rev_u()).cast("double") / 10000.0).alias(alias)
 
 
 # SQL fragment mirroring _rev_u / _drev (DuckDB sums BIGINT exactly in
@@ -304,12 +297,11 @@ def q8_market_share(spark, sf_dir):
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             (
-                F.sum(
+                isum(
                     F.when(F.col("supp_nation") == "NATION_3", rev)
                     .otherwise(F.lit(0).cast("long"))
-                    .cast(D25)
                 ).cast("double")
-                / F.sum(rev.cast(D25)).cast("double")
+                / isum(rev).cast("double")
             ).alias("mkt_share")
         )
         .orderBy("o_year")
@@ -352,7 +344,7 @@ def q9_product_profit(spark, sf_dir):
     s = T(spark, sf_dir, "supplier")
     o = T(spark, sf_dir, "orders")
     n = T(spark, sf_dir, "nation")
-    amount_u = _rev_u() - _cents("p_retailprice") * _cents("l_quantity")
+    amount_u = _rev_u() - cents("p_retailprice") * cents("l_quantity")
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
@@ -362,7 +354,7 @@ def q9_product_profit(spark, sf_dir):
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").alias("o_year"),
         )
-        .agg((F.sum(amount_u.cast(D25)).cast("double") / 10000.0).alias("sum_profit"))
+        .agg((isum(amount_u).cast("double") / 10000.0).alias("sum_profit"))
         .orderBy("nation", F.desc("o_year"))
     )
 
@@ -440,12 +432,12 @@ def q11_important_stock(spark, sf_dir):
     li = T(spark, sf_dir, "lineitem")
     s = T(spark, sf_dir, "supplier")
     n = T(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
-    val_u = _cents("l_extendedprice") * _cents("l_quantity")
+    val_u = cents("l_extendedprice") * cents("l_quantity")
     per = (
         li.join(s, li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy("l_partkey")
-        .agg(F.sum(val_u.cast(D25)).alias("value_u"))
+        .agg(isum(val_u).alias("value_u"))
     )
     total = per.agg(
         F.sum("value_u").alias("total_u"), F.count(F.lit(1)).alias("n_parts")
@@ -571,12 +563,11 @@ def q14_promo_revenue(spark, sf_dir):
         .agg(
             (
                 F.lit(100.0)
-                * F.sum(
+                * isum(
                     F.when(F.col("p_type") == "PROMO", rev)
                     .otherwise(F.lit(0).cast("long"))
-                    .cast(D25)
                 ).cast("double")
-                / F.sum(rev.cast(D25)).cast("double")
+                / isum(rev).cast("double")
             ).alias("promo_revenue")
         )
     )
@@ -606,7 +597,7 @@ def q15_top_supplier(spark, sf_dir):
         & (F.col("l_shipdate") < _ts("1996-04-01"))
     )
     s = T(spark, sf_dir, "supplier")
-    per = li.groupBy("l_suppkey").agg(F.sum(_rev_u().cast(D25)).alias("rev_u"))
+    per = li.groupBy("l_suppkey").agg(isum(_rev_u()).alias("rev_u"))
     mx = per.agg(F.max("rev_u").alias("max_u"))
     return (
         per.join(F.broadcast(mx), per.rev_u == F.col("max_u"))
@@ -681,15 +672,15 @@ def q17_small_quantity(spark, sf_dir):
         "left_semi",
     )
     stats = li.groupBy(F.col("l_partkey").alias("sp")).agg(
-        F.sum(_cents("l_quantity")).alias("sum_qc"),
+        F.sum(cents("l_quantity")).alias("sum_qc"),
         F.count(F.lit(1)).alias("n_li"),
     )
     return (
         li.join(stats, li.l_partkey == stats.sp)
-        .filter(_cents("l_quantity") * 5 * F.col("n_li") < F.col("sum_qc"))
+        .filter(cents("l_quantity") * 5 * F.col("n_li") < F.col("sum_qc"))
         .agg(
             (
-                F.sum(_cents("l_extendedprice").cast(D25)).cast("double")
+                isum(cents("l_extendedprice")).cast("double")
                 / 100.0
                 / 7.0
             ).alias("avg_yearly")
@@ -724,7 +715,7 @@ def q18_large_volume_customer(spark, sf_dir):
     li = T(spark, sf_dir, "lineitem")
     big = (
         li.groupBy(F.col("l_orderkey").alias("bk"))
-        .agg(F.sum(_cents("l_quantity")).alias("sum_qc"))
+        .agg(F.sum(cents("l_quantity")).alias("sum_qc"))
         .filter(F.col("sum_qc") > 250 * 100)
     )
     o = T(spark, sf_dir, "orders")
@@ -837,7 +828,7 @@ def q20_potential_promotion(spark, sf_dir):
             "left_semi",
         )
         .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum(_cents("l_quantity")).alias("sq"))
+        .agg(F.sum(cents("l_quantity")).alias("sq"))
     )
     pq = sq.groupBy(F.col("l_partkey").alias("pk")).agg(
         F.sum("sq").alias("tq"), F.count(F.lit(1)).alias("ns")
@@ -941,18 +932,18 @@ def q22_global_sales(spark, sf_dir):
     avgpos = (
         c.filter(F.col("c_acctbal") > 0)
         .agg(
-            F.sum(_cents("c_acctbal")).alias("sum_c"),
+            F.sum(cents("c_acctbal")).alias("sum_c"),
             F.count(F.lit(1)).alias("n_c"),
         )
     )
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_anti")
         .join(F.broadcast(avgpos))
-        .filter(_cents("c_acctbal") * F.col("n_c") > F.col("sum_c"))
+        .filter(cents("c_acctbal") * F.col("n_c") > F.col("sum_c"))
         .groupBy("cntrycode")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            (F.sum(_cents("c_acctbal").cast(D25)).cast("double") / 100.0).alias(
+            (isum(cents("c_acctbal")).cast("double") / 100.0).alias(
                 "totacctbal"
             ),
         )

@@ -1060,7 +1060,7 @@ def _harvest_add(
 _DRIVER_HARVEST_MAX = 16
 
 # the size a rewriter packs its output files to: compaction bin-packs
-# small files up to it, merge sizes its range-clustered output from it
+# small files up to it, merge sizes its output from it
 _TARGET_FILE_BYTES = 128 << 20
 
 
@@ -1163,6 +1163,11 @@ def _write_data_files(
         df = df.repartitionByRange(n, *cluster_by).sortWithinPartitions(
             *cluster_by
         )
+    elif target_files:
+        # unclustered rewrites (compact, compact_where, merge without
+        # stat_cols) size their output here too: one file per input
+        # partition otherwise, whatever the caller's byte budget
+        df = df.coalesce(target_files)
     # column mapping: everything above (partition derivation, dup
     # columns, clustering) ran on LOGICAL names; the file bytes and the
     # footer stats below carry PHYSICAL names (rename/drop never touch
@@ -1652,16 +1657,11 @@ def compact(
     df = _derive_generated_cols(
         df, table_partition_by(table), table_partition_exprs(table)
     )
-    if not cluster_by:
-        # clustered compactions hand the count to the writer instead of
-        # pre-shuffling here: the writer's getNumPartitions fallback
-        # would force this exchange to run once for the count and again
-        # recomputed under its own range exchange (opt r7)
-        df = df.coalesce(num_files)
+    # the writer sizes the output: a range exchange into num_files
+    # when clustered, a coalesce(num_files) otherwise
     return _rewrite_commit(
         spark, table, "compact", base, [df], current, df.schema.json(),
-        checkpoint_every, stat_cols, cluster_by,
-        target_files=num_files if cluster_by else None,
+        checkpoint_every, stat_cols, cluster_by, target_files=num_files,
     )
 
 
@@ -1786,10 +1786,10 @@ def compact_where(
                 "files_total": len(live)}
     total = sum(a.get("bytes", 0) for a in small)
     n_out = max(1, -(-total // target_bytes))  # ceil
-    df = _read_adds(spark, table, small).coalesce(n_out)
+    df = _read_adds(spark, table, small)
     version = _rewrite_commit(
         spark, table, "compact", base, [df], small, df.schema.json(),
-        checkpoint_every, stat_cols,
+        checkpoint_every, stat_cols, target_files=n_out,
     )
     return {"version": version, "files_compacted": len(small),
             "files_total": len(live)}
@@ -3008,10 +3008,11 @@ def merge_into(
        through the commit untouched as pure metadata. A CDC feed
        touching 0.1% of the key space rewrites ~0.1% of the table.
        The rewrite anti-/semi-joins the touched files to the same
-       broadcast key set, and a range-clustered rewrite (``stat_cols``
-       given) is sized from the log — the touched files' bytes plus the
-       source rows at the table's bytes per row, one file per
-       ``_TARGET_FILE_BYTES`` — instead of by a Spark pass.
+       broadcast key set, and the rewrite is sized from the log — the
+       touched files' bytes plus the source rows at the table's bytes
+       per row, one file per ``_TARGET_FILE_BYTES`` — instead of by a
+       Spark pass: range-clustered into that many files when
+       ``stat_cols`` is given, coalesced into them otherwise.
 
     Insert detection is sound against candidates only: stats pruning is
     conservative, so any source key absent from the candidate files is
@@ -3219,9 +3220,10 @@ def merge_into(
     else:
         rewritten = source
     deleting = when_matched == "delete"
-    # size the clustered rewrite from the log the way compact_where
-    # does: the touched files' bytes plus the source rows at the live
-    # files' bytes per row. Asking the frame for its partition count
+    # size the rewrite (range-clustered with stat_cols, coalesced
+    # without) from the log the way compact_where does: the touched
+    # files' bytes plus the source rows at the live files' bytes per
+    # row. Asking the frame for its partition count
     # instead runs every upstream AQE stage once more before the write.
     sized = [a for a in live if a.get("rows")]
     target_files = None  # no live rows: no bytes per row to go by

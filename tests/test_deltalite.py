@@ -403,6 +403,19 @@ def test_merge_output_sized_from_log(spark, sf_med, table):
     assert (stats["min"], stats["max"]) == (keys[0], keys[-1])
 
 
+def test_merge_unclustered_output_sized_from_log(spark, sf_med, table):
+    """Without ``stat_cols`` the same merge is coalesced into the
+    log-sized file count: one file, not one per input partition."""
+    src, want = _ingest_shape(spark, sf_med, table)
+    before = {a["path"] for a in dl.live_files(table)}
+    res = dl.merge_into(spark, table, src.repartition(8), on="o_orderkey")
+    assert res["files_rewritten"] == res["files_total"] == 20
+    added = [a for a in dl.live_files(table) if a["path"] not in before]
+    assert len(added) == 1, [a["path"] for a in added]
+    got = dl.read_table(spark, table).select("o_orderkey", "o_totalprice")
+    assert dict(got.collect()) == want
+
+
 def test_merge_insert_into_empty_table(spark, table):
     """A table without live rows gives the log no bytes per row: the
     clustered insert falls back to the frame's own partition count and
